@@ -36,8 +36,13 @@ The execution shape is chosen for 100 TB, not just correctness:
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 # One md5 (32 lowercase hex chars) provides four independent 8-char hash
 # slices; permutation j uses slice j%4 of md5('<j//4>|' || shingle).
@@ -79,14 +84,18 @@ def release_checkpoint(df: DataFrame | None) -> None:
     lineage to recompute from, so a post-release read would fail.
 
     No-op on anything that is not a direct checkpoint handle (the
-    analyzed plan must be the checkpoint's own LogicalRDD node)."""
+    analyzed plan must be the checkpoint's own LogicalRDD node) and on a
+    checkpoint already released. A release the JVM refuses is logged:
+    its blocks then stay pinned, and that must not pass unseen."""
     if df is None:
         return
     try:
         plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() != "LogicalRDD":
+            return  # not a bare checkpoint handle
         plan.rdd().unpersist(False)
-    except Exception:
-        pass  # not a bare checkpoint handle / already released
+    except Py4JError:
+        _log.warning("release_checkpoint: unpersist failed", exc_info=True)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -733,6 +742,9 @@ def connected_components(
             # relation served its last round
             release_checkpoint(edges)
             return labels
+    # nothing will read the last round or the edges again
+    release_checkpoint(prev_ckpt)
+    release_checkpoint(edges)
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} rounds "
         "(component diameter exceeds 2^rounds under pointer jumping); "

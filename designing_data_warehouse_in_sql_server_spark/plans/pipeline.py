@@ -13,12 +13,15 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from ..operators.cleaning import cap_outliers_zscore, dedupe, impute_group_mean
+from ..operators.dedup_text import release_checkpoint
 from ..operators.ids import assign_sequential_ids
 from ..operators.watermark import high_watermarks
+from ..session import local_frame
 from ..sources.http_api import Fetcher, extract_incremental
 from ..sources.table_store import TableStore
 
@@ -26,6 +29,14 @@ STG = "stg_weather_raw"
 DIM = "dim_city"
 FACT = "fact_weather"
 RUN_LOG = "_run_log"
+_RUN_LOG_SCHEMA = StructType(
+    [
+        StructField("load_ts", StringType()),
+        StructField("stage", StringType()),
+        StructField("n_rows", LongType()),
+        StructField("duration_sec", DoubleType()),
+    ]
+)
 
 
 def _log_stage(
@@ -33,10 +44,12 @@ def _log_stage(
 ) -> None:
     """Append one run-log record per stage (the engine-side analog of the
     reference's run_etl.bat per-step logging, run_etl_bat:7-31 — S9).
-    Counts are increment-sized, so the log write is O(1)."""
-    df = store.spark.createDataFrame(
+    The record is an Arrow LocalRelation and its count comes from work
+    the stage already did, so logging adds one small write and no job."""
+    df = local_frame(
+        store.spark,
         [(load_ts, stage, int(n_rows), round(float(duration_sec), 3))],
-        "load_ts string, stage string, n_rows long, duration_sec double",
+        _RUN_LOG_SCHEMA,
     )
     if store.exists(RUN_LOG):
         store.append(RUN_LOG, df, capture_cdc=False)
@@ -73,8 +86,10 @@ def extract(
     windows = [(r.city_name, r.start, r.end) for r in windows_df.collect()]  # 5 cities
     new_rows = extract_incremental(spark, fetcher, windows, load_ts)
     t0 = time.monotonic()
+    n_before = store.row_count(STG) if store.exists(STG) else 0
     v = store.append(STG, new_rows)
-    n = store.read(STG).filter(F.col("load_timestamp") == F.lit(load_ts).cast("timestamp_ntz")).count()
+    # the append's own footer-derived stats: rows this extract staged
+    n = store.row_count(STG) - n_before
     _log_stage(store, load_ts, "extract", n, time.monotonic() - t0)
     return v
 
@@ -97,13 +112,15 @@ def transform_load(spark: SparkSession, store: TableStore, load_ts: str) -> None
     # window task (operators/cleaning.py)
     n_staging = store.row_count(STG)
     unprocessed = F.col("is_processed") == False  # noqa: E712  (P3)
-    n_unprocessed = stg.filter(unprocessed).count()
+    # the run log's row count rides the cleaning checkpoint's own job
+    # (a metric on the dedup input) instead of a count job of its own
+    seen = Observation()
 
     # 1. dedup unprocessed rows on (city_name, date); deterministic
     #    tiebreak by load_timestamp DESC (divergence from the reference's
     #    ORDER BY (SELECT NULL), documented in SURVEY §2.5)
     deduped = dedupe(
-        stg.filter(unprocessed),
+        stg.filter(unprocessed).observe(seen, F.count(F.lit(1)).alias("n")),
         keys=["city_name", "date"],
         order_by=[F.col("load_timestamp").desc(), F.col("temp_max").desc_nulls_last()],
     ).unionByName(stg.filter(~unprocessed))
@@ -133,11 +150,27 @@ def transform_load(spark: SparkSession, store: TableStore, load_ts: str) -> None
     # chain re-executes per consumer. Checkpoint the filtered slice
     # only (the stats windows still see every row; the processed branch
     # is never consumed downstream, so materializing it would be pure
-    # waste). Lazy: the first consumer materializes it once; the
-    # relation is increment-sized. On a cluster swap for reliable
+    # waste). Eager, so its job completes the observation above whatever
+    # the session's AQE setting (a lazy checkpoint of a plan with no
+    # materialized exchange reports the metric before any row is read);
+    # the relation is increment-sized. On a cluster swap for reliable
     # checkpoint where executor loss must be survivable.
-    cleaned_unproc = cleaned.filter(unprocessed).localCheckpoint(eager=False)
+    cleaned_unproc = cleaned.filter(unprocessed).localCheckpoint(eager=True)
+    try:
+        _load(store, cleaned_unproc, load_ts, n_staging)
+    finally:
+        release_checkpoint(cleaned_unproc)
 
+    # 6. mark ALL staging rows processed (M4 — no WHERE in the reference)
+    store.update(STG, {"is_processed": F.lit(True)})
+    _log_stage(store, load_ts, "transform_load", seen.get["n"], time.monotonic() - t0)
+
+
+def _load(
+    store: TableStore, cleaned_unproc: DataFrame, load_ts: str, n_staging: int
+) -> None:
+    """Steps 4-5 of transform_load: the dim upsert and the fact merge,
+    both fed by the checkpointed cleaned slice of unprocessed rows."""
     # 4. dim upsert, insert-only (J4): unseen cities get a surrogate key;
     #    other attributes stay NULL exactly like the reference MERGE
     #    (transform_load.sql:47, commentary README.md:285-293)
@@ -202,10 +235,6 @@ def transform_load(spark: SparkSession, store: TableStore, load_ts: str) -> None
         on=["city_id", "date"],
         update_cols=["temp_max", "temp_min", "precipitation", "load_timestamp"],
     )
-
-    # 6. mark ALL staging rows processed (M4 — no WHERE in the reference)
-    store.update(STG, {"is_processed": F.lit(True)})
-    _log_stage(store, load_ts, "transform_load", n_unprocessed, time.monotonic() - t0)
 
 
 def run_pipeline(

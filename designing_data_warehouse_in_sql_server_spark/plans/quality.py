@@ -6,8 +6,8 @@ data-quality operators realize the reference's own stated future work:
 validation checks post-ETL process" (reference README.md:392-393).
 
 Scale notes per operator are inline; the common themes:
-- column profiling is ONE full scan producing all per-column stats as
-  parallel aggregate expressions (never a scan per column);
+- column profiling unions one pruned single-column aggregate per
+  profiled column (no multi-distinct Expand, see data_quality_profile);
 - interval coalescing / anomaly windows shuffle once on the entity key
   and every downstream step reuses that partitioning;
 - corpus operators (bigrams, entropy, BM25) are explode → hash-aggregate
@@ -29,11 +29,14 @@ from .registry import register
 # profiled column: row count, null count, distinct count, min/max (as
 # strings so heterogeneous column types share one schema).
 #
-# Scale: a single scan computes every stat as parallel aggregate
-# expressions (count/count-distinct/min/max all have partial combine);
-# the unpivot to long format happens on the 1-row aggregate output.
-# A naive profiler that loops `for col in columns: df.select(...)` scans
-# the table N times — this is the one-pass form.
+# Scale: a UNION of one aggregate per profiled column. Each branch is a
+# pruned scan of that single column (parquet reads only its column
+# chunks, so the branches together read the bytes one wide scan would)
+# feeding a one-distinct two-level aggregate with partial combine; each
+# branch emits its long-format row directly. The earlier single wide
+# aggregate was retired: four count-distincts in one aggregate plan as
+# an Expand that copies every scanned row once per distinct before the
+# partial aggregation.
 # ---------------------------------------------------------------------------
 _PROFILE_COLS = ("o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
 

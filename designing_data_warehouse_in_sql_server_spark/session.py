@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "ddw-spark", cpus: int | None = None) -> SparkSession:
@@ -36,3 +37,24 @@ def get_spark(app_name: str = "ddw-spark", cpus: int | None = None) -> SparkSess
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A small driver-built frame that plans as an Arrow ``LocalRelation``.
+
+    ``createDataFrame`` over Python rows plans as a ``LogicalRDD`` over a
+    PythonRDD, so every job reading it starts a Python worker to ship the
+    rows: writing a one-row frame took 0.36-0.49 s that way against
+    0.12-0.15 s for a LocalRelation (4-core VM). A ``pyarrow.Table`` with
+    an explicit schema lands in the JVM once and is planned locally. The
+    columns take the schema's own Arrow types, so empty ``rows`` still
+    yield a typed frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)

@@ -24,8 +24,10 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import OPEN_METEO_DAILY
+from ..session import local_frame
 
 Fetcher = Callable[[str, str, str], str]  # (city_name, start_date, end_date) -> JSON
 
@@ -117,11 +119,15 @@ def open_meteo_fetcher(
     return fetch
 
 
+_PAYLOADS = StructType(
+    [StructField("city_name", StringType()), StructField("payload", StringType())]
+)
+
+
 def payloads_to_rows(spark: SparkSession, payloads: Iterable[tuple[str, str]]) -> DataFrame:
     """(city_name, payload_json) pairs -> one row per day (driver-built
-    input; the decode itself is `decode_payloads`)."""
-    raw = spark.createDataFrame(list(payloads), "city_name string, payload string")
-    return decode_payloads(raw)
+    input, an Arrow LocalRelation; the decode itself is `decode_payloads`)."""
+    return decode_payloads(local_frame(spark, list(payloads), _PAYLOADS))
 
 
 def decode_payloads(raw: DataFrame) -> DataFrame:
@@ -173,8 +179,6 @@ def extract_incremental(
         payload = fetch_with_retry(fetcher, city, start, end)
         if payload is not None:
             payloads.append((city, payload))
-    if not payloads:
-        return spark.createDataFrame([], payloads_to_rows(spark, [("x", "{}")]).schema)
     rows = payloads_to_rows(spark, payloads)
     return rows.withColumn("load_timestamp", F.lit(load_ts).cast("timestamp_ntz"))
 

@@ -57,6 +57,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 CDC_INSERT = "insert"
 CDC_UPDATE_PRE = "update_preimage"
@@ -69,14 +70,37 @@ _SCHEMA_INHERIT = object()
 
 
 def _nullable(schema):
-    """All-nullable copy of a StructType: the schema LOG describes what a
-    reader may assume, and post-evolution files legitimately omit new
-    columns, so every logged field must admit nulls."""
-    from pyspark.sql.types import StructField, StructType
+    """All-nullable copy of a StructType, nested fields, array elements
+    and map values included: the schema LOG describes what a reader may
+    assume, and post-evolution files legitimately omit new columns, so
+    every logged field must admit nulls. It is also the shape Spark's
+    file sources give any schema they read with, so two schemas describe
+    the same read exactly when their ``_nullable`` copies are equal."""
 
-    return StructType(
-        [StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
-    )
+    def relax(node):
+        if isinstance(node, list):
+            return [relax(x) for x in node]
+        if not isinstance(node, dict):
+            return node
+        return {
+            k: True
+            if k in ("nullable", "containsNull", "valueContainsNull")
+            else v if k == "metadata" else relax(v)
+            for k, v in node.items()
+        }
+
+    return StructType.fromJson(relax(schema.jsonValue()))
+
+
+def _same_read(staged, prev_read, schema_log):
+    """The read schema an append-style commit (new files staged, the
+    previous version's files linked) may carry: the staged files' schema
+    when the commit does not evolve the schema and the staged files read
+    exactly as the linked ones do. Otherwise None: a mixed-schema version
+    has no single footer schema to carry, so it is inferred on first read."""
+    if schema_log is not _SCHEMA_INHERIT or staged is None:
+        return None
+    return staged if _nullable(staged) == prev_read else None
 
 _DUP_KEY_MARK = "MERGE_DUPLICATE_SOURCE_KEYS"
 _CHECK_MARK = "CHECK_CONSTRAINT_VIOLATION"
@@ -210,6 +234,17 @@ class TableStore:
         # O(increment) metadata, and a CDC-enabled append stops paying
         # two O(table-files) walks per logical commit).
         self._vstats: dict[tuple[str, int], tuple[int, int]] = {}
+        # the schema each committed version reads with, keyed like
+        # _vstats and safe for the same reason (versions are immutable).
+        # Reading a version with an explicit schema spares the footer-
+        # inference job Spark otherwise submits per read. Writes whose
+        # staged frame IS the version's full content carry the entry into
+        # _commit (``read_schema``), the way they carry ``stats``; every
+        # other version (schema-evolving appends, restore, clone,
+        # partitioned layouts, versions committed by another process) is
+        # inferred once on first read and memoized. A logged schema
+        # (table_schema) still takes precedence. drop and vacuum evict.
+        self._read_schemas: dict[tuple[str, int], StructType] = {}
         os.makedirs(root, exist_ok=True)
 
     def _file_rows(self, path: str) -> int:
@@ -283,6 +318,7 @@ class TableStore:
         op: str = "write",
         stats: tuple[int, int] | None = None,
         schema=_SCHEMA_INHERIT,
+        read_schema: StructType | None = None,
     ) -> None:
         # schema log BEFORE the pointer swap: a committed version must
         # never be visible without the schema a reader needs for it
@@ -291,6 +327,12 @@ class TableStore:
         with open(tmp, "w") as fh:
             fh.write(str(version))
         os.replace(tmp, self._pointer(name))  # atomic pointer swap
+        # memoized only once the version is real: a staged-then-abandoned
+        # version number is reused by the next write (see __init__)
+        if read_schema is None:
+            self._read_schemas.pop((name, version), None)
+        else:
+            self._read_schemas[(name, version)] = read_schema
         self._log_history(name, version, op, stats)
 
     # -- schema log (ALTER TABLE ADD COLUMNS / mergeSchema analog) -------------
@@ -334,8 +376,6 @@ class TableStore:
         metadata at 100 TB: Spark's mergeSchema option would distribute
         a footer-reading job over every file of every version."""
         import json as _json
-
-        from pyspark.sql.types import StructType
 
         v = version if version is not None else self.current_version(name)
         if v is None:
@@ -422,11 +462,18 @@ class TableStore:
         covers the reference's system-versioned dim history, README.md:91).
         Post-evolution versions read with the LOGGED schema (files written
         before a column existed simply yield nulls for it — the parquet
-        reader resolves by name); pre-evolution versions read by footer
-        inference exactly as before."""
-        sch = self.table_schema(name, version)
-        reader = self.spark.read if sch is None else self.spark.read.schema(sch)
-        return reader.parquet(os.path.join(self._dir(name), f"v{version}"))
+        reader resolves by name); pre-evolution versions read with the
+        memoized footer schema (see __init__), so reading a version this
+        process committed submits no Spark job, and any other version
+        pays one footer-inference job on its first read."""
+        vdir = os.path.join(self._dir(name), f"v{version}")
+        sch = self.table_schema(name, version) or self._read_schemas.get((name, version))
+        if sch is not None:
+            return self.spark.read.schema(sch).parquet(vdir)
+        df = self.spark.read.parquet(vdir)
+        if version <= (self.current_version(name) or 0):  # committed: immutable
+            self._read_schemas[(name, version)] = df.schema
+        return df
 
     def row_count(self, name: str) -> int:
         """Exact row count of the current version from parquet FOOTERS —
@@ -670,11 +717,18 @@ class TableStore:
         return df.withColumn(first, guarded)
 
     # -- writes ----------------------------------------------------------------
-    def _stage_version(self, name: str, df: DataFrame) -> tuple[int, str]:
+    def _stage_version(
+        self, name: str, df: DataFrame
+    ) -> tuple[int, str, StructType | None]:
         """Write the files of the next version WITHOUT committing the
         pointer; readers keep seeing the current version until _commit.
         CHECK constraints validate inside this write job (``_guarded``);
-        a violation aborts the job with the pointer untouched."""
+        a violation aborts the job with the pointer untouched.
+
+        Also returns the schema of the frame written, the one a footer
+        inference over the staged files yields (Spark makes it nullable
+        on read); None for a partitioned layout, whose partition columns
+        are typed from directory names at read time."""
         v = (self.current_version(name) or 0) + 1
         os.makedirs(self._dir(name), exist_ok=True)
         vdir = os.path.join(self._dir(name), f"v{v}")
@@ -689,11 +743,12 @@ class TableStore:
             # a skewed partition across tasks (a plain repartition(spec)
             # would funnel a giant partition through one task at scale).
             df = df.hint("rebalance", *[F.col(c) for c in spec])
-        writer = self._guarded(name, df).write.mode("overwrite")
+        written = self._guarded(name, df)
+        writer = written.write.mode("overwrite")
         if spec:
             writer = writer.partitionBy(*spec)
         writer.parquet(vdir)
-        return v, vdir
+        return v, vdir, None if spec else written.schema
 
     def _staged_stats(self, vdir: str) -> tuple[int, int]:
         """(num_files, num_rows) of a just-staged version directory —
@@ -711,7 +766,7 @@ class TableStore:
     def _write_version(
         self, name: str, df: DataFrame, link_untouched: bool = False, op: str = "write"
     ) -> int:
-        v, vdir = self._stage_version(name, df)
+        v, vdir, read_schema = self._stage_version(name, df)
         stats = self._staged_stats(vdir)
         if link_untouched and self.partition_spec(name):
             linked = self._link_untouched(name, vdir)
@@ -725,7 +780,7 @@ class TableStore:
             if self.exists(name) and self.table_schema(name) is not None
             else _SCHEMA_INHERIT
         )
-        self._commit(name, v, op, stats=stats, schema=schema)
+        self._commit(name, v, op, stats=stats, schema=schema, read_schema=read_schema)
         return v
 
     def _link_untouched(self, name: str, vdir: str) -> tuple[int, int]:
@@ -832,7 +887,7 @@ class TableStore:
         # align column order with the stored layout (metadata-only select);
         # fail loud first — a silent select() would drop misnamed/extra
         # increment columns without any error
-        prev_schema = self.table_schema(name) or _nullable(self.read(name).schema)
+        prev_schema = _nullable(self.table_schema(name) or self.read(name).schema)
         stored = [f.name for f in prev_schema.fields]
         extra = set(df.columns) - set(stored)
         missing = set(stored) - set(df.columns)
@@ -859,8 +914,6 @@ class TableStore:
                     f"(extra columns {sorted(extra)}, missing columns "
                     f"{sorted(missing)}); pass merge_schema=True to evolve"
                 )
-            from pyspark.sql.types import StructType
-
             new_fields = [inc_by_name[c] for c in df.columns if c in extra]
             schema = StructType(list(prev_schema.fields) + new_fields)
             df = df.select(
@@ -869,10 +922,13 @@ class TableStore:
             )
         else:
             df = df.select(*stored)
-        v, vdir = self._stage_version(name, df)
+        v, vdir, staged_schema = self._stage_version(name, df)
         stats = self._staged_append_stats(name, vdir)  # before linking
         self._link_prev_files(name, vdir)
-        self._commit(name, v, "append", stats=stats, schema=schema)
+        self._commit(
+            name, v, "append", stats=stats, schema=schema,
+            read_schema=_same_read(staged_schema, prev_schema, schema),
+        )
         if capture_cdc and self._feed_exists(name):
             self._append_changes(name, df.withColumn("_change_type", F.lit(CDC_INSERT)), v)
         return v
@@ -1050,12 +1106,12 @@ class TableStore:
             )
         want_cdc = capture_cdc and self._feed_exists(name)
 
-        v, vdir = self._stage_version(name, updated.drop("__upd"))
+        v, vdir, read_schema = self._stage_version(name, updated.drop("__upd"))
         stats = self._staged_stats(vdir)
         if pruned:
             linked = self._link_untouched(name, vdir)
             stats = (stats[0] + linked[0], stats[1] + linked[1])
-        self._commit(name, v, "update", stats=stats)
+        self._commit(name, v, "update", stats=stats, read_schema=read_schema)
         if want_cdc:
             # pre/post images of matching rows only (match evaluated on the
             # OLD values — the flag is computed before the SET is applied)
@@ -1098,6 +1154,9 @@ class TableStore:
         # a re-created table restarts at v1 — stale memo entries would
         # otherwise describe the dropped incarnation's versions
         self._vstats = {k: s for k, s in self._vstats.items() if k[0] != name}
+        self._read_schemas = {
+            k: s for k, s in self._read_schemas.items() if k[0] != name
+        }
 
     # -- maintenance: retention / layout / data skipping -----------------------
     def vacuum(self, name: str, keep_last: int = 2) -> list[int]:
@@ -1162,6 +1221,7 @@ class TableStore:
             }
         for v in removed:
             self._vstats.pop((name, v), None)
+            self._read_schemas.pop((name, v), None)
         return removed
 
     def _stats_path(self, name: str, version: int) -> str:
@@ -1350,16 +1410,18 @@ class TableStore:
         v = (self.current_version(name) or 0) + 1
         vdir = os.path.join(self._dir(name), f"v{v}")
         keyed = frames[curve](df, zorder_by[0], zorder_by[1])
-        writer = (
+        laid_out = (
             keyed.repartitionByRange(target_files, *spec, "__zkey")
             .sortWithinPartitions(*spec, "__zkey")
             .drop("__zkey")
-            .write.mode("overwrite")
         )
+        writer = laid_out.write.mode("overwrite")
         if spec:
             writer = writer.partitionBy(*spec)
         writer.parquet(vdir)
-        self._commit(name, v, "optimize")
+        self._commit(
+            name, v, "optimize", read_schema=None if spec else laid_out.schema
+        )
         self.collect_file_stats(
             name, list(zorder_by) + [c for c in spec if c not in zorder_by]
         )
@@ -1395,6 +1457,8 @@ class TableStore:
         columns functionally dependent on the merge keys (a key never
         moves between partitions).
         """
+        from ..operators.dedup_text import release_checkpoint
+
         target = self.read(name)
 
         spec = self.partition_spec(name)
@@ -1470,20 +1534,25 @@ class TableStore:
         result = joined.select(*out_cols, action.alias("__action"))
 
         try:
-            v, vdir = self._stage_version(name, result.drop("__action"))
-        except Exception as ex:
-            if _is_dup_key_error(ex):
-                raise ValueError(f"merge source has duplicate keys on {on}") from None
-            raise
-        stats = self._staged_stats(vdir)
-        if pruned:
-            linked = self._link_untouched(name, vdir)
-            stats = (stats[0] + linked[0], stats[1] + linked[1])
-        self._commit(name, v, "merge", stats=stats)
-        # CDC after the main commit: a failure here can lose a feed entry
-        # for a committed version, never record one for a phantom version.
-        if capture_cdc:
-            self._log_cdc(name, result, joined, on, data_cols, insert_only, v)
+            try:
+                v, vdir, read_schema = self._stage_version(name, result.drop("__action"))
+            except Exception as ex:
+                if _is_dup_key_error(ex):
+                    raise ValueError(f"merge source has duplicate keys on {on}") from None
+                raise
+            stats = self._staged_stats(vdir)
+            if pruned:
+                linked = self._link_untouched(name, vdir)
+                stats = (stats[0] + linked[0], stats[1] + linked[1])
+            self._commit(name, v, "merge", stats=stats, read_schema=read_schema)
+            # CDC after the main commit: a failure here can lose a feed
+            # entry for a committed version, never record one for a
+            # phantom version.
+            if capture_cdc:
+                self._log_cdc(name, result, joined, on, data_cols, insert_only, v)
+        finally:
+            if capture_cdc:
+                release_checkpoint(joined)  # its last reader was _log_cdc
         return v
 
     # -- CDC (S8: Delta Change Data Feed analog) --------------------------------
@@ -1516,13 +1585,11 @@ class TableStore:
             # the feed follows the source table's evolution: change rows
             # carrying columns the feed has not seen evolve the feed's
             # logged schema the same way merge_schema evolves the table
-            feed_schema = self.table_schema(cdc) or _nullable(self.read(cdc).schema)
+            feed_schema = _nullable(self.table_schema(cdc) or self.read(cdc).schema)
             feed_cols = [f.name for f in feed_schema.fields]
             extra = [c for c in changes.columns if c not in feed_cols]
             schema = _SCHEMA_INHERIT
             if extra:
-                from pyspark.sql.types import StructType
-
                 inc_by_name = {f.name: f for f in _nullable(changes.schema).fields}
                 schema = StructType(
                     list(feed_schema.fields) + [inc_by_name[c] for c in extra]
@@ -1550,11 +1617,14 @@ class TableStore:
                 )
             else:
                 changes = changes.select(*feed_cols)
-            v, vdir = self._stage_version(cdc, changes)
+            v, vdir, staged_schema = self._stage_version(cdc, changes)
             stats = self._staged_append_stats(cdc, vdir)  # before linking
             staged = self._staged_parquet_files(vdir)  # before linking
             self._link_prev_files(cdc, vdir)
-            self._commit(cdc, v, "cdc-append", stats=stats, schema=schema)
+            self._commit(
+                cdc, v, "cdc-append", stats=stats, schema=schema,
+                read_schema=_same_read(staged_schema, feed_schema, schema),
+            )
         else:
             v = self._write_version(cdc, changes, op="cdc-append")
             staged = self._staged_parquet_files(

@@ -346,3 +346,17 @@ def test_hilbert_oracle_sql_survives_high_custkeys(spark, tmp_path):
     assert len(oracle) == len(rows)
     for r in got:
         assert oracle[r.o_orderkey] == r.hkey, (r.o_orderkey, r.hkey)
+
+
+def test_hilbert_key_keeps_a_column_whose_name_has_a_backtick(spark):
+    from pyspark.sql import functions as F
+
+    from designing_data_warehouse_in_sql_server_spark.sources.layout import (
+        with_hilbert_key,
+    )
+
+    df = spark.createDataFrame([(1, 2, "p"), (3, 0, "q")], "x int, y int, `a``b` string")
+    out = with_hilbert_key(df, F.col("x"), F.col("y"), "hkey", bits=2)
+    assert out.columns == ["x", "y", "a`b", "hkey"]
+    got = sorted((r["x"], r["y"], r["a`b"]) for r in out.collect())
+    assert got == [(1, 2, "p"), (3, 0, "q")]

@@ -176,6 +176,48 @@ def test_connected_components_releases_loop_checkpoints(spark):
     assert labels.count() == 51
 
 
+def test_connected_components_non_convergence_releases_checkpoints(spark):
+    """Raising on non-convergence releases the edge relation and the last
+    round's checkpoint: no block stays pinned for the rest of the session."""
+    import pytest
+
+    from designing_data_warehouse_in_sql_server_spark.operators.dedup_text import (
+        connected_components,
+    )
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(50)], "id_a bigint, id_b bigint"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iterations=1)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_release_checkpoint_logs_a_refused_release(spark, caplog):
+    """A plain frame is a silent no-op; a release the JVM refuses is
+    logged instead of swallowed."""
+    from py4j.protocol import Py4JError
+
+    from designing_data_warehouse_in_sql_server_spark.operators.dedup_text import (
+        release_checkpoint,
+    )
+
+    class _Refusing:
+        class _jdf:
+            @staticmethod
+            def queryExecution():
+                raise Py4JError("refused")
+
+    logger = "designing_data_warehouse_in_sql_server_spark.operators.dedup_text"
+    with caplog.at_level("WARNING", logger=logger):
+        release_checkpoint(spark.range(3))
+        release_checkpoint(None)
+        release_checkpoint(_Refusing())
+    got = [(r.levelname, r.getMessage()) for r in caplog.records if r.name == logger]
+    assert got == [("WARNING", "release_checkpoint: unpersist failed")]
+
+
 def test_segment_dedup_first_wins_and_vanishing_doc(spark):
     from designing_data_warehouse_in_sql_server_spark.operators.dedup_text import segment_dedup
 

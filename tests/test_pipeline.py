@@ -292,3 +292,78 @@ def test_weather_api_streaming_source(spark, tmp_path):
         ],
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_driver_built_frames_plan_as_arrow_local_relations(spark):
+    """The run-log record and the payload frame are Arrow LocalRelations,
+    never a LogicalRDD over a PythonRDD (which writes ~3x slower). Arrow
+    conversion can fall back to the row path without a word, so only a
+    plan check catches a regression."""
+    from designing_data_warehouse_in_sql_server_spark.plans import pipeline
+    from designing_data_warehouse_in_sql_server_spark.sources.http_api import (
+        payloads_to_rows,
+    )
+
+    class _CaptureStore:
+        def __init__(self):
+            self.spark, self.frames = spark, []
+
+        def exists(self, name):
+            return False
+
+        def overwrite(self, name, df):
+            self.frames.append(df)
+
+    cap = _CaptureStore()
+    pipeline._log_stage(cap, LOAD_TS, "extract", 29, 0.5)
+    rows = payloads_to_rows(spark, [("London", fake_fetcher("London", "2024-02-01", "2024-02-02"))])
+    empty = payloads_to_rows(spark, [])
+    for df in (cap.frames[0], rows, empty):
+        plan = _plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert [tuple(r) for r in cap.frames[0].collect()] == [(LOAD_TS, "extract", 29, 0.5)]
+    assert rows.count() == 2 and empty.count() == 0
+    assert empty.schema == rows.schema
+
+
+def test_run_log_counts_match_the_staged_and_unprocessed_rows(spark, store):
+    """extract logs the rows it staged (its append's footer delta) and
+    transform_load the unprocessed staging rows it consumed (an
+    observation on the dedup input) — the counts a filter+count job per
+    stage used to give. A re-run extract under its own load_ts stages the
+    same windows again, so transform_load sees both increments."""
+    from designing_data_warehouse_in_sql_server_spark.plans.pipeline import (
+        RUN_LOG,
+        extract,
+    )
+
+    ts1, ts2 = "2024-02-06 01:00:00", "2024-02-06 02:00:00"
+    stg = lambda: store.read("stg_weather_raw")  # noqa: E731
+    extract(spark, store, fake_fetcher, "2024-02-05", ts1)
+    extract(spark, store, fake_fetcher, "2024-02-05", ts2)
+    staged = {
+        ts: stg().filter(F.col("load_timestamp") == F.lit(ts).cast("timestamp_ntz")).count()
+        for ts in (ts1, ts2)
+    }
+    unprocessed = stg().filter("NOT is_processed").count()
+    transform_load(spark, store, ts2)
+
+    log = {(r.load_ts, r.stage): r.n_rows for r in store.read(RUN_LOG).collect()}
+    assert staged[ts1] > 0 and staged[ts1] == staged[ts2]
+    assert log == {
+        (ts1, "extract"): staged[ts1],
+        (ts2, "extract"): staged[ts2],
+        (ts2, "transform_load"): unprocessed,
+    }
+    assert unprocessed >= staged[ts1] + staged[ts2]
+
+
+def test_run_pipeline_leaves_no_checkpoint_pinned(spark, store):
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    run_pipeline(spark, store, fake_fetcher, today="2024-02-05", load_ts=LOAD_TS)
+    run_pipeline(spark, store, fake_fetcher, today="2024-02-06", load_ts="2024-02-07 02:00:00")
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before == set()

@@ -1297,3 +1297,148 @@ def test_schema_evolution_partitioned_table(spark, store):
     assert got == {1: None, 2: None, 3: 30}
     # partition pruning still works on the evolved table
     assert store.read("t").filter(F.col("k") == 3).count() == 1
+
+
+# -- read-schema memo ---------------------------------------------------------
+def _footer_read_schema(spark, store, name, v):
+    """What a read of version ``v`` sees without the memo: its logged
+    schema when it has one, else a fresh footer inference."""
+    vdir = os.path.join(store.root, name, f"v{v}")
+    logged = store.table_schema(name, v)
+    reader = spark.read if logged is None else spark.read.schema(logged)
+    return reader.parquet(vdir).schema
+
+
+def _assert_reads_match_footers(spark, store, name):
+    cur = store.current_version(name)
+    assert store.read(name).schema == _footer_read_schema(spark, store, name, cur)
+    for v in range(1, cur + 1):
+        if os.path.isdir(os.path.join(store.root, name, f"v{v}")):
+            got = store.time_travel(name, v).schema
+            assert got == _footer_read_schema(spark, store, name, v), (name, v)
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+_WIDE = "k int, x int, v string, d date, ts timestamp_ntz, amt decimal(5,2), tags array<string>"
+
+
+def _wide(spark, keys, v="a"):
+    import datetime as dt
+    from decimal import Decimal
+
+    return spark.createDataFrame(
+        [
+            (k, k % 7, v, dt.date(2024, 1, 1 + k % 28), dt.datetime(2024, 1, 1, k % 24),
+             Decimal("1.25") * k, [v, str(k)])
+            for k in keys
+        ],
+        _WIDE,
+    )
+
+
+def test_read_schema_memo_matches_footers_on_every_write_path(spark, store):
+    t = "t"
+    store.overwrite(t, _wide(spark, range(0, 10)))
+    store.append(t, _wide(spark, range(10, 15)))
+    # an increment whose array column is built in Spark (non-null elements)
+    store.append(
+        t, _wide(spark, range(15, 18)).withColumn("tags", F.array(F.col("v"), F.col("v")))
+    )
+    store.append(t, _wide(spark, range(18, 20)), merge_schema=True)  # same shape
+    store.merge(t, _wide(spark, [3, 30], v="m"), on=["k"])
+    store.update(t, {"v": F.upper("v")}, where=F.col("k") < 5)
+    store.update(t, {"x": F.col("x").cast("long")})  # retyping update
+    store.compact(t)
+    store.optimize(t, zorder_by=("k", "x"))
+    store.restore(t, 2)
+    store.clone(t, "c")
+    store.append("c", _wide(spark, [40]))
+    store.truncate(t)
+    store.append(t, _wide(spark, [50]))
+    # change feed: init, merge capture, append capture, evolving capture
+    store.enable_cdc(t)
+    store.merge(t, _wide(spark, [50, 51], v="f"), on=["k"])
+    store.append(t, _wide(spark, [52]))
+    store.append(t, _wide(spark, [53]).withColumn("extra", F.lit(1)), merge_schema=True)
+    store.append(t, _wide(spark, [54]).withColumn("extra", F.lit(2)))  # logged mode
+    store.restore(t, 3)  # back across the evolution
+    for name in (t, "c", "_cdc__t"):
+        _assert_reads_match_footers(spark, store, name)
+
+
+def test_read_schema_memo_partitioned_and_recreated_tables(spark, store):
+    p = "p"
+    store.overwrite(p, _wide(spark, range(0, 14)), partition_by=["d"])
+    store.merge(p, _wide(spark, [1, 2], v="m"), on=["k"])  # partition-pruned
+    store.update(p, {"v": F.lit("u")}, where=F.col("k") == 1)  # pruned update
+    store.append(p, _wide(spark, [20, 21]))
+    store.compact(p)
+    store.optimize(p, zorder_by=("k", "x"))
+    _assert_reads_match_footers(spark, store, p)
+    # a string partition column of digits reads back as int: partition
+    # types come from directory names, never from the written frame
+    q = _wide(spark, range(4)).withColumn("bucket", F.col("x").cast("string"))
+    store.overwrite("q", q, partition_by=["bucket"])
+    store.append("q", q)
+    _assert_reads_match_footers(spark, store, "q")
+
+    # a failed merge stages and abandons v2; the next write reuses v2
+    store.overwrite("d", _wide(spark, [1, 2]))
+    with pytest.raises(ValueError, match="duplicate"):
+        store.merge("d", _wide(spark, [1, 1]), on=["k"])
+    store.overwrite("d", spark.createDataFrame([(1, 2.5)], "k long, w double"))
+    _assert_reads_match_footers(spark, store, "d")
+    assert store.read("d").columns == ["k", "w"]
+
+    # drop, then another store (process) recreates the name: no entry of
+    # the dropped incarnation may survive
+    store.drop("d")
+    other = TableStore(spark, store.root)
+    other.overwrite("d", _df(spark, [(1, "a")]))
+    other.append("d", _df(spark, [(2, "b")]))
+    _assert_reads_match_footers(spark, store, "d")
+    assert store.read("d").schema["k"].dataType.simpleString() == "int"
+
+
+def test_read_of_version_committed_in_process_submits_no_job(spark, store):
+    store.overwrite("t", _wide(spark, range(5)))
+    store.append("t", _wide(spark, range(5, 8)))
+    store.merge("t", _wide(spark, [1, 9], v="m"), on=["k"])
+    store.update("t", {"v": F.lit("u")})
+    store.truncate("t")
+    for v in range(1, store.current_version("t") + 1):
+        assert _spark_jobs(spark, lambda v=v: store.time_travel("t", v).schema) == 0, v
+    # a store without the memo (another process) infers once, then reuses it
+    cold = TableStore(spark, store.root)
+    assert _spark_jobs(spark, lambda: cold.read("t").schema) >= 1
+    assert _spark_jobs(spark, lambda: cold.read("t").schema) == 0
+    # vacuum evicts the entries of the versions it reclaims
+    store.vacuum("t", keep_last=1)
+    assert {v for n, v in store._read_schemas if n == "t"} == {store.current_version("t")}
+
+
+def test_merge_releases_its_checkpoint_on_success_and_failure(spark, store):
+    store.overwrite("t", _df(spark, [(1, "a"), (2, "b")]))
+    before = _persistent_rdd_ids(spark)
+    store.merge("t", _df(spark, [(2, "B"), (3, "c")]), on=["k"])
+    assert _persistent_rdd_ids(spark) - before == set()
+    with pytest.raises(ValueError, match="duplicate"):
+        store.merge("t", _df(spark, [(1, "x"), (1, "y")]), on=["k"])
+    assert _persistent_rdd_ids(spark) - before == set()
