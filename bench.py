@@ -39,6 +39,24 @@ HEADLINE = [
 ]
 
 
+def warm_up(spark, qs: dict, warm_dir: str) -> None:
+    """Run every query once at ``warm_dir``. A query that fails here is
+    named on stderr with its exception type and the first line of its
+    message; the warm-up itself never fails the bench."""
+    for name in sorted(qs):
+        try:
+            df = qs[name](spark, warm_dir)
+            df.write.format("noop").mode("overwrite").save()
+        except Exception as exc:
+            first_line = str(exc).split("\n", 1)[0]
+            print(f"warm-up {name}: {type(exc).__name__}: {first_line}", file=sys.stderr)
+        # Release the query's JVM-side references (checkpoint RDD
+        # blocks, broadcasts) before the next one — see the timed
+        # loop in main for the measured rationale.
+        df = None
+        gc.collect()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from designing_data_warehouse_in_sql_server_spark.session import get_spark
@@ -55,17 +73,7 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if os.path.isdir(warm_dir):
-        for name in sorted(qs):
-            try:
-                df = qs[name](spark, warm_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass  # warm-up must never fail the bench
-            # Release the query's JVM-side references (checkpoint RDD
-            # blocks, broadcasts) before the next one — see the timed
-            # loop below for the measured rationale.
-            df = None
-            gc.collect()
+        warm_up(spark, qs, warm_dir)
     spark.sparkContext._jvm.System.gc()
 
     names = [n for n in HEADLINE if n in qs]

@@ -1890,16 +1890,17 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     euro_ps = _pseudo_partsupp(l).join(
         euro_supp, F.col("ps_suppkey") == F.col("s_suppkey")
     ).select("ps_partkey", (F.col("ps_cost_cents") * F.col("ps_availqty")).alias("value_cents"))
-    # one materialization feeds both the per-part aggregate and the
-    # global average (two consumers, one computation)
-    by_part = (
-        euro_ps.groupBy("ps_partkey")
-        .agg(F.sum("value_cents").cast("bigint").alias("part_value_cents"))
-        .localCheckpoint(eager=False)
+    # both consumers of by_part (the filter and the global average) read
+    # one shuffle: the plan reuses the identical exchange (ReusedExchange)
+    by_part = euro_ps.groupBy("ps_partkey").agg(
+        F.sum("value_cents").cast("bigint").alias("part_value_cents")
     )
+    # no broadcast hint: the planner sizes a global aggregate at one row
+    # and broadcasts it anyway, while a hint would sit over the whole
+    # supplier- and lineitem-derived lineage
     avg_value = by_part.agg(F.avg("part_value_cents").alias("avg_value"))
     return (
-        by_part.crossJoin(F.broadcast(avg_value))
+        by_part.crossJoin(avg_value)
         .filter(F.col("part_value_cents") > 2.0 * F.col("avg_value"))
         .select("ps_partkey", "part_value_cents")
     )

@@ -1236,6 +1236,7 @@ class TableStore:
         import glob as _glob
         import json as _json
 
+        import pyarrow as _pa
         import pyarrow.parquet as _pq
 
         v = self.current_version(name)
@@ -1283,11 +1284,18 @@ class TableStore:
                 lo = hi = None
                 for rg in range(md.num_row_groups):
                     st = md.row_group(rg).column(idx[col]).statistics
-                    if st is None or not st.has_min_max:
+                    try:
+                        usable = st is not None and st.has_min_max
+                        rg_lo, rg_hi = (st.min, st.max) if usable else (None, None)
+                    except _pa.ArrowNotImplementedError:
+                        # pyarrow cannot decode some stats (Spark writes
+                        # a small decimal as INT32): stats-less, kept
+                        rg_lo = rg_hi = None
+                    if rg_lo is None:
                         lo = hi = None
                         break  # any stats-less row group disables skipping
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
+                    lo = rg_lo if lo is None else min(lo, rg_lo)
+                    hi = rg_hi if hi is None else max(hi, rg_hi)
                 # only JSON-native primitive stats participate in skipping:
                 # a timestamp/decimal min would round-trip as a string and
                 # compare lexicographically against the caller's probe

@@ -1442,3 +1442,23 @@ def test_merge_releases_its_checkpoint_on_success_and_failure(spark, store):
     with pytest.raises(ValueError, match="duplicate"):
         store.merge("t", _df(spark, [(1, "x"), (1, "y")]), on=["k"])
     assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_optimize_zorder_on_a_decimal_column_keeps_its_files(spark, store):
+    """pyarrow cannot decode the footer stats of Spark's INT32-backed
+    decimal(5,2): such a column is stats-less, so every file is kept."""
+    from decimal import Decimal
+
+    p = "p"
+    store.overwrite(p, _wide(spark, range(0, 40)), partition_by=["d"])
+    v = store.optimize(p, zorder_by=("k", "amt"))
+    assert store.current_version(p) == v
+    with open(store._stats_path(p, v)) as fh:
+        import json
+
+        files = json.load(fh)["files"]
+    assert files and all("amt" not in f["stats"] and "k" in f["stats"] for f in files)
+    lo, hi = Decimal("5.00"), Decimal("20.00")
+    got = sorted(store.read_skipping(p, "amt", lo, hi).collect())
+    want = sorted(store.read(p).filter(F.col("amt").between(lo, hi)).collect())
+    assert got == want and len(want) == 13
