@@ -15,12 +15,19 @@ The execution shape is chosen for 100 TB, not just correctness:
   materialization barrier, so the tokenize+shingle expression is never
   inlined and recomputed by projection collapse; (3) the later
   ``groupBy(id)`` reuses the hash partitioning — no second shuffle.
+- **Grams are exploded positions, never lambdas.** Every word gram,
+  shingle and segment comes from :func:`word_grams`: explode the
+  window start positions, then build each gram with a plain
+  ``slice`` of the pre-split words column. A ``transform`` lambda that
+  closes over the split expression re-runs the split for every
+  position (Spark does not eliminate common subexpressions inside
+  lambdas, and interprets them), and Catalyst may copy the whole
+  lambda into an inferred filter below the exchange. With no lambda
+  there is nothing to copy, so no optimizer rule needs excluding.
 - **Explode + aggregate, not nested arrays.** Signatures are computed
-  as ``explode(shingles) -> groupBy(id).agg(min(...))``. Plain
-  (non-higher-order) expressions stay inside WholeStageCodegen where
-  Spark's subexpression elimination evaluates each md5 exactly once per
-  shingle; higher-order ``transform`` lambdas are interpreted and
-  re-evaluate shared subtrees.
+  as ``gram rows -> groupBy(id).agg(min(...))``. Plain expressions
+  stay inside WholeStageCodegen where Spark's subexpression
+  elimination evaluates each md5 exactly once per shingle.
 - **4 permutations per md5.** One md5 yields 32 hex chars = four
   8-hex-char slices, each an independent uniform hash. H permutations
   cost ceil(H/4) md5 calls per shingle. Lexicographic MIN over
@@ -48,29 +55,6 @@ _log = logging.getLogger(__name__)
 # slices; permutation j uses slice j%4 of md5('<j//4>|' || shingle).
 SLICES_PER_MD5 = 4
 SLICE_LEN = 8
-
-
-_INFER_FILTERS_FROM_GENERATE = (
-    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-)
-
-
-def _disable_generate_filter_inference(df: DataFrame) -> None:
-    """InferFiltersFromGenerate puts ``size(e) > 0 AND isnotnull(e)``
-    under every explode. When the generator input is a computed
-    higher-order expression, predicate pushdown substitutes the FULL
-    expression into that filter and re-evaluates it (twice) per scan row
-    in interpreted mode — measured 20x slower on the shingle pipelines
-    (21.8s -> 1.1s at sf0.1 with the rule excluded). Our shingle arrays
-    are non-empty by construction (word-count pre-filter), so the
-    inferred filter prunes nothing. Runtime-settable, idempotent."""
-    spark = df.sparkSession
-    key = "spark.sql.optimizer.excludedRules"
-    current = spark.conf.get(key, None)
-    if not current:
-        spark.conf.set(key, _INFER_FILTERS_FROM_GENERATE)
-    elif _INFER_FILTERS_FROM_GENERATE not in current:
-        spark.conf.set(key, current + "," + _INFER_FILTERS_FROM_GENERATE)
 
 
 def release_checkpoint(df: DataFrame | None) -> None:
@@ -111,38 +95,50 @@ def words_col(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles; empty array when the doc has < k words."""
-    w = words_col(text)
-    n = F.size(w) - F.lit(k - 1)
-    return F.when(
-        n >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.array_join(F.slice(w, i, k), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def word_grams(df: DataFrame, words: str, k: int, step: int = 1) -> DataFrame:
+    """Gram rows of the pre-split array column ``words``: every column of
+    ``df`` plus ``pos`` (the window's first word, 1-based) and ``gram``
+    (its words joined by single spaces), one row per window.
+
+    Windows of ``k`` words start at words 1, 1+step, 1+2*step, ... for
+    as long as a window still reaches a word the previous one did not,
+    i.e. up to word n-k+step of an n-word row. ``step=1`` gives the
+    n-k+1 k-grams, so a row with fewer than k words yields none;
+    ``step=k`` tiles the row and its last window may be shorter. A row
+    whose ``words`` is NULL yields none.
+
+    The row filter runs first because ``sequence(1, m)`` counts down when
+    m < 1. The positions are exploded and each gram is a plain ``slice``
+    of the carried words column: no lambda re-runs the split per
+    position, and the generator input is not a column, so Catalyst
+    infers no filter over it."""
+    last = F.size(words) - (k - step)
+    return (
+        df.filter(last >= 1)
+        .select("*", F.explode(F.sequence(F.lit(1), last, F.lit(step))).alias("pos"))
+        .withColumn("gram", F.array_join(F.slice(words, F.col("pos"), k), " "))
+    )
 
 
 def shingle_docs(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, __sh: array<string>) with the shingle array computed exactly
-    once per doc at full parallelism. Docs with < k words drop out (no
-    signature).
+    """(id, __s) rows, one per k-word shingle position, tokenized once
+    per doc after one ``spread(id)``. A shingle repeated within a doc
+    repeats; docs with < k words yield no row (no signature). Grouping
+    by id reuses the spread's partitioning, so signatures and
+    :func:`shingle_sets` need no second exchange."""
+    words = spread(df, id_col).select(
+        F.col(id_col), words_col(F.col(text_col)).alias("__w")
+    )
+    return word_grams(words, "__w", k).select(F.col(id_col), F.col("gram").alias("__s"))
 
-    The short-doc filter is expressed on the word count, NOT on
-    ``size(shingles) > 0``: a predicate over the shingle array gets
-    pushed below the repartition exchange by Catalyst and re-evaluates
-    the whole (interpreted, higher-order) shingle expression per row on
-    the narrow scan side — measured 10-20x slower on this corpus. The
-    word-count form is a cheap scan-side predicate and is equivalent
-    (>= k words <=> >= 1 shingle), leaving exactly one shingle
-    evaluation, post-exchange, at full parallelism."""
-    _disable_generate_filter_inference(df)
-    filtered = df.filter(F.size(words_col(F.col(text_col))) >= k)
-    return spread(filtered, id_col).select(
-        F.col(id_col), shingles_col(F.col(text_col), k).alias("__sh")
+
+def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+    """(id, __sh: array<string>): each doc's distinct k-word shingles,
+    for set-algebra consumers. The regroup reuses shingle_docs' id
+    partitioning, so group before any checkpoint: a checkpoint forgets
+    the partitioning and would cost an exchange per regroup."""
+    return shingle_docs(df, id_col, text_col, k).groupBy(id_col).agg(
+        F.collect_set("__s").alias("__sh")
     )
 
 
@@ -190,13 +186,13 @@ def minhash_from_shingles(
     bands: int = 4,
     rows_per_band: int = 2,
 ) -> DataFrame:
-    """Per-doc LSH band buckets from a (id, __sh) shingle table.
+    """Per-doc LSH band buckets from :func:`shingle_docs` rows.
 
-    Shape: explode -> groupBy(id) with H = bands*rows_per_band MIN
+    Shape: groupBy(id) over the shingle rows with H = bands*rows_per_band MIN
     aggregates (each an 8-hex md5 slice, ceil(H/4) md5s per shingle
     after subexpression elimination) -> band bucket = md5 of its
     rows_per_band minima. The groupBy reuses shingle_docs' hash
-    partitioning on id, so the explode never shuffles. Documents
+    partitioning on id, so the shingle rows never shuffle. Documents
     sharing >= 1 band bucket are near-dup candidates.
     """
     mins = minhash_minima(shingled, id_col, bands * rows_per_band)
@@ -218,13 +214,12 @@ def minhash_from_shingles(
 
 def minhash_minima(shingled: DataFrame, id_col: str, n_perms: int) -> DataFrame:
     """Per-doc raw minhash minima ``(id, __m0..__m{n_perms-1})`` from a
-    (id, __sh) shingle table — the signature VECTOR itself, for
+    :func:`shingle_docs` rows — the signature VECTOR itself, for
     estimate-style consumers (matching-minima fraction estimates
     Jaccard); band bucketing (:func:`minhash_from_shingles`) folds
-    these into collision keys. One explode + one grouped n_perms-way
-    MIN aggregate reusing shingle_docs' id partitioning (no shuffle)."""
-    tokens = shingled.select(F.col(id_col), F.explode("__sh").alias("__s"))
-    return tokens.groupBy(id_col).agg(
+    these into collision keys. One grouped n_perms-way MIN aggregate
+    reusing shingle_docs' id partitioning (no shuffle)."""
+    return shingled.groupBy(id_col).agg(
         *[F.min(_perm_hash(j, F.col("__s"))).alias(f"__m{j}") for j in range(n_perms)]
     )
 
@@ -268,19 +263,20 @@ def ngram_jaccard(
     id_col: str,
     text_col: str,
     k: int = 3,
-    shingled: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard for candidate pairs (verification stage).
 
     Jaccard = |A ∩ B| / |A ∪ B| over distinct k-shingles; integer sizes
-    divide to a deterministic double on both engines. The shingle table
-    feeds both join sides, so it is checkpointed once (pass `shingled`
-    to share one materialization with the candidate-generation stage);
-    the candidate `pairs` input is LSH-bounded, so the array intersect /
-    union work is proportional to candidates, not n^2."""
-    if shingled is None:
-        shingled = shingle_docs(docs, id_col, text_col, k).localCheckpoint(eager=False)
-    sh = shingled.withColumnRenamed(id_col, "__id")
+    divide to a deterministic double on both engines. The shingle-set
+    table (:func:`shingle_sets`) feeds both join sides, so it is
+    checkpointed once (pass `sets` to share one materialization with the
+    candidate-generation stage); the candidate `pairs` input is
+    LSH-bounded, so the array intersect / union work is proportional to
+    candidates, not n^2."""
+    if sets is None:
+        sets = shingle_sets(docs, id_col, text_col, k).localCheckpoint(eager=False)
+    sh = sets.withColumnRenamed(id_col, "__id")
     a = sh.alias("sa")
     b = sh.alias("sb")
     return (
@@ -305,7 +301,7 @@ def shingle_containment(
     id_col: str,
     text_col: str,
     k: int = 3,
-    shingled: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric shingle containment for candidate pairs:
     containment_a = |A ∩ B| / |A| (and symmetrically for B) — the
@@ -314,9 +310,9 @@ def shingle_containment(
     arbitrarily small). Same LSH-bounded join shape and shared shingle
     materialization as ``ngram_jaccard``; integer set sizes divide to a
     deterministic double on both engines."""
-    if shingled is None:
-        shingled = shingle_docs(docs, id_col, text_col, k).localCheckpoint(eager=False)
-    sh = shingled.withColumnRenamed(id_col, "__id")
+    if sets is None:
+        sets = shingle_sets(docs, id_col, text_col, k).localCheckpoint(eager=False)
+    sh = sets.withColumnRenamed(id_col, "__id")
     a = sh.alias("ca")
     b = sh.alias("cb")
     return (
@@ -347,7 +343,7 @@ def simhash_fingerprint(
     high bit of md5 nibble i (hex char >= '8' — lexicographic compare is
     exact for lowercase hex). Returns (id, simhash string, n_shingles).
 
-    Scale: repartition(id) -> explode(shingles) -> ONE groupBy(id) with
+    Scale: repartition(id) -> distinct shingle rows -> ONE groupBy(id) with
     `bits` conditional sums over substrings of a single md5 (codegen
     subexpression elimination: one md5 per shingle); the groupBy reuses
     the repartitioning, so nothing shuffles twice. The fingerprint is a
@@ -385,7 +381,7 @@ def simhash_fingerprint(
         )
     sh = (
         shingle_docs(df, id_col, text_col, k)
-        .select(F.col(id_col), F.explode("__sh").alias("__s"))
+        .distinct()
         .select(F.col(id_col), h.alias("__h"))
         .select(F.col(id_col), *chunk_cols)
     )
@@ -752,6 +748,18 @@ def connected_components(
     )
 
 
+def _segments(df: DataFrame, id_col: str, text_col: str, seg_words: int) -> DataFrame:
+    """(id, seg_idx, seg_text): each non-blank doc tiled into
+    ``seg_words``-word segments (the last may be shorter). ``seg_idx``
+    is the segment's first word position, which orders segments."""
+    words = df.filter(F.length(F.trim(F.col(text_col))) > 0).select(
+        F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__w")
+    )
+    return word_grams(words, "__w", seg_words, step=seg_words).select(
+        F.col(id_col), F.col("pos").alias("seg_idx"), F.col("gram").alias("seg_text")
+    )
+
+
 def segment_dedup(
     df: DataFrame, id_col: str, text_col: str, seg_words: int = 20
 ) -> DataFrame:
@@ -773,16 +781,7 @@ def segment_dedup(
     driver participation; the first-wins rule is a deterministic
     row_number over the unique (doc_id, position) order.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_segs = F.ceil(F.size(words) / F.lit(seg_words)).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_segs - 1),
-        lambda i: F.array_join(F.slice(words, i * seg_words + 1, F.lit(seg_words)), " "),
-    )
-    exploded = (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(segs).alias("seg_idx", "seg_text"))
-    )
+    exploded = _segments(df, id_col, text_col, seg_words)
     from pyspark.sql import Window as W
 
     first_wins = W.partitionBy(F.md5(F.col("seg_text"))).orderBy(id_col, "seg_idx")
@@ -864,15 +863,8 @@ def boilerplate_removal(
     broadcast; the join is a co-partitioned shuffle join on the hash.
     No UDFs, no driver participation.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_segs = F.ceil(F.size(words) / F.lit(seg_words)).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_segs - 1),
-        lambda i: F.array_join(F.slice(words, i * seg_words + 1, F.lit(seg_words)), " "),
-    )
     exploded = (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(segs).alias("seg_idx", "seg_text"))
+        _segments(df, id_col, text_col, seg_words)
         .withColumn("__h", F.md5("seg_text"))
         # one materialization feeds both the frequency aggregate and the
         # join probe side (self-join sides don't share scans otherwise)

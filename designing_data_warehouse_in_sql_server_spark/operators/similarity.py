@@ -448,16 +448,22 @@ def jl_project(vec: Column, in_dim: int, out_dim: int) -> Column:
     expressions (interpreted, not whole-stage codegen — but still no
     Python boundary) — per-row narrow work, no shuffle, no UDF. Capacity:
     |q[i]| <= 1e4 x |x|, so |projected[j]| <= in_dim * 1e4 * max|x| —
-    int64-safe for any realistic embedding scale."""
-    q = quantized(vec)
-    idx = F.sequence(F.lit(0), F.lit(in_dim - 1))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(out_dim - 1)),
-        lambda j: F.aggregate(
-            F.zip_with(q, idx, lambda x, i: x * jl_sign(i, j)),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        ),
+    int64-safe for any realistic embedding scale.
+
+    Each input dim contributes its row ``q[i] * s(i, .)`` and the rows
+    are summed elementwise, so no lambda closes over ``q``: a per-output
+    lambda over it would re-quantize the vector out_dim times (measured
+    1.5x slower at sf0.01)."""
+    js = F.sequence(F.lit(0), F.lit(out_dim - 1))
+    rows = F.zip_with(
+        quantized(vec),
+        F.sequence(F.lit(0), F.lit(in_dim - 1)),
+        lambda x, i: F.transform(js, lambda j: x * jl_sign(i, j)),
+    )
+    return F.aggregate(
+        rows,
+        F.array_repeat(F.lit(0).cast("bigint"), out_dim),
+        lambda acc, r: F.zip_with(acc, r, lambda a, b: a + b),
     )
 
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_text import shingles_col, spread, words_col
+from .dedup_text import spread, word_grams, words_col
 
 # Stopword alternations per language — deliberately regex-dialect-neutral
 # (word boundaries + literal ASCII words work identically in Java regex
@@ -85,21 +85,17 @@ def repetition_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     groupBy(id) reduces bigram counts to the per-doc max. Both are plain
     hash aggregates of narrow rows; no windows, no driver involvement.
     Docs with < 2 words have no bigram and are excluded (both engines)."""
-    t = F.col(text_col)
-    w = words_col(t)
-    n = F.size(w)
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n - 1), lambda i: F.array_join(F.slice(w, i, 2), " ")
+    words = spread(df, id_col).select(
+        F.col(id_col), words_col(F.col(text_col)).alias("__w")
     )
-    exploded = (
-        spread(df, id_col)
-        .filter(F.size(words_col(t)) >= 2)
-        .select(
-            F.col(id_col),
-            n.alias("n_words"),
-            F.size(F.array_distinct(w)).alias("n_distinct_words"),
-            F.explode(bigrams).alias("bigram"),
-        )
+    per_doc = words.select(
+        id_col,
+        "__w",
+        F.size("__w").alias("n_words"),
+        F.size(F.array_distinct("__w")).alias("n_distinct_words"),
+    )
+    exploded = word_grams(per_doc, "__w", 2).select(
+        id_col, "n_words", "n_distinct_words", F.col("gram").alias("bigram")
     )
     per_bigram = exploded.groupBy(id_col, "bigram").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -170,14 +166,8 @@ def contamination(
     drop the broadcast hint and let AQE pick the join."""
     from .dedup_text import shingle_docs
 
-    c = shingle_docs(corpus, id_col, text_col, k).select(
-        F.col(id_col), F.explode("__sh").alias("__s")
-    )
-    b = (
-        shingle_docs(benchmark, id_col, text_col, k)
-        .select(F.explode("__sh").alias("__s"))
-        .distinct()
-    )
+    c = shingle_docs(corpus, id_col, text_col, k)
+    b = shingle_docs(benchmark, id_col, text_col, k).select("__s").distinct()
     return (
         c.join(F.broadcast(b), "__s")
         .groupBy(id_col)
@@ -193,14 +183,19 @@ def fingerprints(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
     Scale: shingling + per-shingle md5 is the heavy row-local step, so
     the input is spread to full parallelism first (small scans produce
     few splits; at cluster scale the repartition is one cheap shuffle of
-    raw text that unlocks N-way compute)."""
-    df = spread(df, id_col)
+    raw text that unlocks N-way compute). The per-doc MIN reuses the
+    spread's id partitioning; the content hashes join it on id, and docs
+    with < k words keep a NULL ``min_shingle_hash``."""
     t = F.col(text_col)
     normalized = F.regexp_replace(F.trim(F.lower(t)), r"\s+", " ")
-    return df.select(
-        F.col(id_col),
-        F.md5(normalized).alias("content_md5"),
-        F.array_min(F.transform(shingles_col(t, k), F.md5)).alias("min_shingle_hash"),
+    words = spread(df, id_col).select(F.col(id_col), words_col(t).alias("__w"))
+    mins = (
+        word_grams(words, "__w", k)
+        .groupBy(id_col)
+        .agg(F.min(F.md5("gram")).alias("min_shingle_hash"))
+    )
+    return df.select(F.col(id_col), F.md5(normalized).alias("content_md5")).join(
+        mins, id_col, "left"
     )
 
 

@@ -22,9 +22,11 @@ from ..operators.dedup_text import (
     ngram_jaccard,
     segment_dedup,
     shingle_docs,
+    shingle_sets,
     simhash_fingerprint,
     simhash_near_pairs,
     simhash_near_pairs_multitable,
+    word_grams,
     words_col,
 )
 from ..operators.multimodal import documents_as_assets, extract_features
@@ -57,6 +59,12 @@ def _with_exact_copies(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionAll(
         docs.select((F.col("doc_id") + ID_OFFSET).alias("doc_id"), "text")
     )
+
+
+def _set_rows(sets: DataFrame) -> DataFrame:
+    """shingle_sets' (doc_id, __sh) back to shingle_docs' (doc_id, __s)
+    rows, so one checkpointed set table feeds signatures too."""
+    return sets.select("doc_id", F.explode("__sh").alias("__s"))
 
 
 def _with_near_copies(docs: DataFrame) -> DataFrame:
@@ -180,12 +188,12 @@ JOIN sh sb ON p.id_b = sb.doc_id
 @register("dedup_ngram_jaccard", JACCARD_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _with_near_copies(load_table(spark, sf_dir, "documents"))
-    # one materialized shingle table feeds signature generation AND
+    # one materialized shingle-set table feeds signature generation AND
     # Jaccard verification (three consumers, one computation)
-    shingled = shingle_docs(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
-    sigs = minhash_from_shingles(shingled, "doc_id", bands=BANDS, rows_per_band=ROWS_PER_BAND)
+    sets = shingle_sets(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
+    sigs = minhash_from_shingles(_set_rows(sets), "doc_id", bands=BANDS, rows_per_band=ROWS_PER_BAND)
     pairs = lsh_candidate_pairs(sigs, "doc_id")
-    return ngram_jaccard(pairs, docs, "doc_id", "text", k=3, shingled=shingled)
+    return ngram_jaccard(pairs, docs, "doc_id", "text", k=3, sets=sets)
 
 
 # ---------------------------------------------------------------------------
@@ -221,10 +229,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup_text import shingle_containment
 
     docs = _with_near_copies(load_table(spark, sf_dir, "documents"))
-    shingled = shingle_docs(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
-    sigs = minhash_from_shingles(shingled, "doc_id", bands=BANDS, rows_per_band=ROWS_PER_BAND)
+    sets = shingle_sets(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
+    sigs = minhash_from_shingles(_set_rows(sets), "doc_id", bands=BANDS, rows_per_band=ROWS_PER_BAND)
     pairs = lsh_candidate_pairs(sigs, "doc_id")
-    return shingle_containment(pairs, docs, "doc_id", "text", k=3, shingled=shingled)
+    return shingle_containment(pairs, docs, "doc_id", "text", k=3, sets=sets)
 
 
 # ---------------------------------------------------------------------------
@@ -2832,7 +2840,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 4  # 4-word shingles (distinct from decontaminate_ngrams' 5)
     bench_sh = (
         shingle_docs(docs.filter(F.col("doc_id") % 89 == 0), "doc_id", "text", k=k)
-        .select(F.explode("__sh").alias("__s"))
+        .select("__s")
         .distinct()
         .localCheckpoint(eager=False)  # built once, used twice (bits + verify)
     )
@@ -2843,7 +2851,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = build_bloom_bits(bench_sh, "__s", n_bits=n_bits)
     corpus = shingle_docs(
         docs.filter(F.col("doc_id") % 89 != 0), "doc_id", "text", k=k
-    ).select("doc_id", F.explode("__sh").alias("__s"))
+    )
     pruned = corpus.filter(might_contain(F.col("__s"), bloom))
     return (
         pruned.join(F.broadcast(bench_sh), "__s")  # exact verify kills FPs
@@ -4901,9 +4909,7 @@ def lsh_recall_certification(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % CERT_SAMPLE_MOD == 0
         )
     )
-    shingled = shingle_docs(docs, "doc_id", "text", k=3).localCheckpoint(
-        eager=False
-    )
+    sets = shingle_sets(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
     # truth side runs entirely on 40-bit shingle fingerprints (8-byte
     # BIGINTs in every shuffle instead of 25-40 byte strings — see
     # _CERT_FP_SPARK header). r12: the per-doc fp SET is materialized
@@ -4916,7 +4922,7 @@ def lsh_recall_certification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.71 s at sf0.1, 5.62 -> 3.95 s (1.42x) at 6x docs; identical
     # output (sorted-collect equality + oracle).
     fps = (
-        shingled.select(
+        sets.select(
             "doc_id",
             F.expr(
                 "array_sort(array_distinct(transform(__sh, s -> "
@@ -4963,7 +4969,7 @@ def lsh_recall_certification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(2 * F.col("n_common") >= F.col("n_union"))
     )
     lsh = lsh_candidate_pairs(
-        minhash_from_shingles(shingled, "doc_id", bands=BANDS,
+        minhash_from_shingles(_set_rows(sets), "doc_id", bands=BANDS,
                               rows_per_band=ROWS_PER_BAND),
         "doc_id",
     ).select("id_a", "id_b", F.lit(1).alias("caught"))
@@ -5766,16 +5772,11 @@ def stupid_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.select("doc_id", words_col(F.col("text")).alias("__ws")).filter(
         F.size("__ws") >= 2
     )
-    pos = w.select(
+    pos = word_grams(w, "__ws", 2).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(__ws) - 1),"
-                " i -> struct(element_at(__ws, i) AS w1,"
-                "             element_at(__ws, i + 1) AS w2))"
-            )
-        ).alias("__g"),
-    ).select("doc_id", F.col("__g.w1").alias("w1"), F.col("__g.w2").alias("w2"))
+        F.element_at("__ws", F.col("pos")).alias("w1"),
+        F.element_at("__ws", F.col("pos") + 1).alias("w2"),
+    )
     grams = pos.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("k")
     )

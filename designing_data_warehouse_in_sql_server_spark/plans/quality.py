@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup_text import words_col
+from ..operators.dedup_text import word_grams, words_col
 from ..sources.parquet import load_table, table_row_count
 from .registry import register
 
@@ -378,18 +378,7 @@ LIMIT 25
 def corpus_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(words_col(F.col("text")).alias("t"))
-    # guard single-token docs: sequence(1, 0) is the DESCENDING [1, 0] in
-    # Spark, so t[i-1]/t[i] would index out of range (ANSI runtime error)
-    # while DuckDB's range(1, 1) is empty — emit an empty array instead,
-    # exactly like shingles_col does
-    bigrams = toks.select(
-        F.explode(
-            F.when(
-                F.size("t") >= 2,
-                F.expr("transform(sequence(1, size(t) - 1), i -> t[i - 1] || ' ' || t[i])"),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("bigram")
-    )
+    bigrams = word_grams(toks, "t", 2).select(F.col("gram").alias("bigram"))
     return (
         bigrams.groupBy("bigram")
         .agg(F.count("*").alias("n"))
@@ -3452,19 +3441,12 @@ def _bpe_merge_loop(
     # the last parent is never released here.
     parent: DataFrame | None = None
     for it in range(1, n_merges + 1):
-        sy = F.split(F.trim(F.col("s")), "  ")
-        pair = F.concat(
-            F.element_at(sy, F.col("i")), F.lit(" "), F.element_at(sy, F.col("i") + 1)
-        )
+        # adjacent symbol pairs are the symbol 2-grams (symbols hold no
+        # space); single-symbol words contribute none
+        syms = cur.select(F.split(F.trim(F.col("s")), "  ").alias("__sy"), "cnt")
         top = (
-            # single-symbol words contribute no pairs; the filter also
-            # guards Spark's DESCENDING sequence(1, 0) == [1, 0]
-            cur.filter(F.size(sy) >= 2)
-            .select(
-                F.explode(F.sequence(F.lit(1), F.size(sy) - 1)).alias("i"), "s", "cnt"
-            )
-            .select(pair.alias("pair"), "cnt")
-            .groupBy("pair")
+            word_grams(syms, "__sy", 2)
+            .groupBy(F.col("gram").alias("pair"))
             .agg(F.sum("cnt").alias("cnt"))
             .orderBy(F.desc("cnt"), "pair")
             .limit(1)
@@ -4353,22 +4335,8 @@ def dup_span_per_doc(base: DataFrame) -> DataFrame:
     dup_frac_bp). Shared by dup_span_fraction and the curation funnel —
     the funnel runs it on the post-dedup SURVIVOR set, so span coverage
     is measured against the corpus that would actually be trained on."""
-    pos = (
-        base.filter(F.size("w") >= DUPSPAN_W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.size("w") - (DUPSPAN_W - 1))
-            ).alias("p"),
-            "w",
-        )
-        .select(
-            "doc_id",
-            F.col("p").cast("long").alias("p"),
-            F.array_join(F.slice("w", F.col("p"), DUPSPAN_W), " ").alias(
-                "gram"
-            ),
-        )
+    pos = word_grams(base, "w", DUPSPAN_W).select(
+        "doc_id", F.col("pos").cast("long").alias("p"), "gram"
     )
     # ">= 2 distinct docs" == "min(doc_id) != max(doc_id)": same boolean
     # on non-null ids, but min/max are plain map-side-combinable
@@ -4441,13 +4409,14 @@ def dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coverage). Complements dup_span_fraction: novelty measures what a
 # document ADDS, span coverage measures what it REPEATS.
 #
-# Scale: per-doc distinct 3-grams come from array_distinct BEFORE the
-# explode (doc-local, no shuffle); first-occurrence attribution is a
-# MIN window over the gram key — ONE hash exchange on the gram, no
-# join back (the window and a groupBy+join compute the same thing;
-# the window does it in the single exchange). The per-doc reduction
-# reuses the doc_id partitioning of the final aggregate. Linear in
-# Sigma(distinct grams per doc); no pair enumeration.
+# Scale: 3-gram rows come from word_grams (doc-local, no shuffle);
+# first-occurrence attribution is a MIN window over the gram key — ONE
+# hash exchange on the gram, no join back (the window and a
+# groupBy+join compute the same thing; the window does it in the
+# single exchange), and the per-doc dedup of repeated grams rides that
+# gram partitioning. The per-doc reduction reuses the doc_id
+# partitioning of the final aggregate. Linear in Sigma(grams per doc);
+# no pair enumeration.
 #
 # Adjudicated alternative (measured, kept OUT): the two-hash-aggregate
 # form — groupBy(gram).min(doc_id) then groupBy(min_doc).count(), with
@@ -4496,16 +4465,19 @@ ORDER BY doc_id
 
 @register("ngram_novelty_score", NOVELTY_ORACLE)
 def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup_text import shingles_col
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    g = docs.select(
-        "doc_id",
-        F.explode(shingles_col(F.col("text"), k=NOVELTY_K)).alias("gram"),
-    )
-    attributed = g.select(
-        "doc_id",
-        F.min("doc_id").over(W.partitionBy("gram")).alias("first_doc"),
+    words = docs.select("doc_id", words_col(F.col("text")).alias("w"))
+    # the per-doc dedup runs after the window: the window's gram
+    # partitioning already clusters every (doc_id, gram) pair, so the
+    # distinct adds no exchange, and MIN is blind to repeats
+    attributed = (
+        word_grams(words, "w", NOVELTY_K)
+        .select(
+            "doc_id",
+            "gram",
+            F.min("doc_id").over(W.partitionBy("gram")).alias("first_doc"),
+        )
+        .distinct()
     )
     per_doc = attributed.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_grams"),
@@ -4870,17 +4842,12 @@ def llm_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the planted near-copy drops every 7th word off the NORMALIZED
     # word array (runs of 6 < DUPSPAN_W=8 — zero shared spans with the
     # original; shingle Jaccard ~0.6 — inside the LSH catch curve)
-    planted = (
-        docs.withColumn("__w", words_col(F.col("text")))
-        .select(
-            (F.col("doc_id") + ID_OFFSET).alias("doc_id"),
-            "lang",
-            F.expr(
-                "array_join(transform("
-                "filter(sequence(1, size(__w)), i -> i % 7 != 1), "
-                "i -> element_at(__w, i)), ' ')"
-            ).alias("text"),
-        )
+    planted = docs.select(
+        (F.col("doc_id") + ID_OFFSET).alias("doc_id"),
+        "lang",
+        F.array_join(
+            F.filter(words_col(F.col("text")), lambda _, i: i % 7 != 0), " "
+        ).alias("text"),
     )
     corpus = docs.unionByName(planted)
     # stage 1: the certified curation funnel semantics
@@ -5122,24 +5089,11 @@ def hash_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", words_col(F.col("text")).alias("w")
     )
-    feats = docs.select(
-        "doc_id",
-        F.explode(
-            F.concat(
-                F.col("w"),
-                F.coalesce(
-                    F.when(
-                        F.size("w") >= 2,
-                        F.expr(
-                            "transform(sequence(1, size(w) - 1),"
-                            " i -> concat(element_at(w, i), ' ',"
-                            " element_at(w, i + 1)))"
-                        ),
-                    ),
-                    F.expr("array()"),
-                ),
-            )
-        ).alias("tok"),
+    # unigram and bigram features: the 1-grams and 2-grams of each doc
+    feats = (
+        word_grams(docs, "w", 1)
+        .unionByName(word_grams(docs, "w", 2))
+        .select("doc_id", F.col("gram").alias("tok"))
     )
     bucketed = feats.select(
         "doc_id",
@@ -5180,8 +5134,8 @@ def hash_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BETWEEN corpus components. Output is |sources|^2-bounded (tiny), the
 # work is gram-bounded (corpus-linear).
 #
-# Scale: per-doc distinct grams (array_distinct BEFORE the explode — no
-# shuffle), dedup to (gram, source), then ONE hash aggregate on gram
+# Scale: gram rows from word_grams (doc-local, no shuffle), dedup to
+# (gram, source), then ONE hash aggregate on gram
 # collecting the source set — bounded by |sources| (20 here), NEVER by
 # documents, so collect_set cannot blow up — and an explode of the
 # per-gram source-pair cross (<= |sources|^2 per gram, in practice the
@@ -5237,13 +5191,10 @@ ORDER BY src_a, src_b
 
 @register("source_overlap_matrix", OVERLAP_ORACLE)
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup_text import shingles_col
-
-    docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    sh = docs.select(
-        "source",
-        F.explode(shingles_col(F.col("text"), k=_OVERLAP_K)).alias("gram"),
-    ).distinct()
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", words_col(F.col("text")).alias("w")
+    )
+    sh = word_grams(docs, "w", _OVERLAP_K).select("source", "gram").distinct()
     src_tot = sh.groupBy("source").agg(F.count("*").cast("long").alias("n_grams"))
     per_gram = sh.groupBy("gram").agg(F.collect_set("source").alias("srcs"))
     pairs = (

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 TABLES = (
@@ -62,9 +63,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 # Session settings that change what Spark infers from the same footers.
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
+    NANOS_AS_LONG,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -116,32 +119,57 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Load events with ``ts`` normalized to TIMESTAMP_NTZ.
+def events_ts_is_nanos(path: str) -> bool:
+    """True when the events table at ``path`` (a parquet file or a
+    directory of them) stores ``ts`` as INT64 TIMESTAMP(NANOS).
 
-    The driver's testdata has shipped two physical encodings of ``ts``
-    across rounds: INT64 TIMESTAMP(NANOS) (which Spark's vectorized reader
-    rejects — read nanos as long and rebuild), and plain ``timestamp[us]``
-    (NTZ — readable directly). Branch on the decoded type so both work.
+    The testdata has shipped ``ts`` both that way and as plain
+    ``timestamp[us]`` (NTZ). Footers only: a metadata read on the Spark
+    driver, no Spark job. Every file is probed and a mixed
+    encoding is rejected, because one schema serves the whole table
+    (and a stream over it), so half the files would misparse."""
+    import pyarrow.parquet as pq
 
-    For the nanos path, integer `div` (not `/`) keeps full precision
-    (nanos ~1e18 exceeds a double's 53-bit mantissa), and truncation to
-    micros matches DuckDB's ns→us read of the same file. NTZ arithmetic
-    keeps the value independent of the session timezone.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
+    if os.path.isdir(path):
+        files = [
+            os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".parquet")
+        ]
+    else:
+        files = [path] if os.path.isfile(path) else []
+    units = {getattr(pq.read_schema(f).field("ts").type, "unit", None) for f in files}
+    if len(units) > 1:
+        raise ValueError(
+            f"mixed ts encodings across events files in {path}: {units} "
+            "— re-encode to one physical type"
+        )
+    return units == {"ns"}
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _read_parquet(spark, path)
-    if not isinstance(df.schema["ts"].dataType, LongType):
-        return df  # already timestamp[_ntz] — nothing to rebuild
+
+def nanos_ts_to_ntz(df: DataFrame) -> DataFrame:
+    """Rebuild a nanos-as-long ``ts`` as TIMESTAMP_NTZ. Integer ``div``
+    (not ``/``) keeps full precision (nanos ~1e18 exceeds a double's
+    53-bit mantissa), and truncation to micros matches DuckDB's ns->us
+    read of the same file. NTZ arithmetic keeps the value independent
+    of the session timezone."""
     return df.withColumn(
         "ts",
         F.expr(
             "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
         ),
     )
+
+
+def _load_events(spark: SparkSession, path: str) -> DataFrame:
+    """Load events with ``ts`` as TIMESTAMP_NTZ from either encoding.
+
+    Spark's vectorized reader rejects INT64 TIMESTAMP(NANOS), so only a
+    nanos-encoded table sets ``nanosAsLong`` and rebuilds ``ts``. The
+    setting must still hold when the scan executes, so it stays set for
+    the session; a ``timestamp[us]`` table leaves it untouched."""
+    if not events_ts_is_nanos(path):
+        return _read_parquet(spark, path)
+    spark.conf.set(NANOS_AS_LONG, "true")
+    return nanos_ts_to_ntz(_read_parquet(spark, path))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

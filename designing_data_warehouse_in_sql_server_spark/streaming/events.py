@@ -19,65 +19,36 @@ on the aggregate keys is identical to the batch plan.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.parquet import NANOS_AS_LONG, events_ts_is_nanos, nanos_ts_to_ntz
 
 EVENTS_RAW_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
 
-# nanos-encoded rounds: ts arrives as INT64 TIMESTAMP(NANOS), which the
-# vectorized reader rejects — stream it as long and rebuild (mirrors
-# sources/parquet._load_events exactly)
+# nanos-encoded tables: ts is read as long and rebuilt, as the batch
+# loader does (sources/parquet._load_events)
 EVENTS_RAW_SCHEMA_NANOS = (
     "event_id long, ts long, user_id long, event_type string, "
     "value double, props string"
 )
 
 
-def _events_ts_is_nanos(sf_dir: str) -> bool:
-    """Probe the parquet footers: the driver's testdata has shipped ts
-    as both INT64 TIMESTAMP(NANOS) and plain timestamp[us] NTZ across
-    rounds; the batch loader branches at read time, and the streaming
-    source must match or it breaks on a re-encode while batch keeps
-    working. EVERY file is probed (footers only — metadata reads) and a
-    mixed-encoding directory is rejected up front: one schema serves
-    the whole stream, so half the files would otherwise misparse
-    mid-stream. At warehouse scale the same check reads the table
-    manifest instead of globbing footers."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(f"{sf_dir}/events.parq*"))
-    if not files:
-        return False
-    units = {
-        getattr(pq.read_schema(f).field("ts").type, "unit", None) for f in files
-    }
-    if len(units) > 1:
-        raise ValueError(
-            f"mixed ts encodings across events files in {sf_dir}: {units} "
-            "— re-encode to one physical type before streaming"
-        )
-    return units == {"ns"}
-
-
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, normalizing ``ts`` to
     TIMESTAMP the same way the batch loader does for either physical
-    encoding (footer-probed; see _events_ts_is_nanos)."""
-    nanos = _events_ts_is_nanos(sf_dir)
+    encoding (footer-probed; see sources/parquet.events_ts_is_nanos)."""
+    nanos = events_ts_is_nanos(os.path.join(sf_dir, "events.parquet"))
     if nanos:
-        # DELIBERATELY session-lived, exactly like the batch loader
-        # (sources/parquet._load_events): the conf must still be set
-        # when each MICROBATCH executes, so a set/restore scoped to
-        # this builder would break the running stream. It is a legacy
-        # read-compat flag with no effect on non-nanos tables.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # session-lived, like the batch loader's: the setting must still
+        # hold when each micro-batch executes
+        spark.conf.set(NANOS_AS_LONG, "true")
     # a glob (not an exact file path) keeps the source's basePath a
     # directory, which the file streaming source requires
     raw = (
@@ -88,13 +59,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{sf_dir}/events.parq*")
     )
     if nanos:
-        raw = raw.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
+        raw = nanos_ts_to_ntz(raw)
     # withWatermark only accepts TIMESTAMP (LTZ), so the batch reader's
     # TIMESTAMP_NTZ column is not usable directly; the LTZ values only
     # coincide with the batch NTZ values when the session timezone is

@@ -32,7 +32,7 @@ from designing_data_warehouse_in_sql_server_spark.operators.dedup_text import ( 
     lsh_candidate_pairs,
     minhash_from_shingles,
     ngram_jaccard,
-    shingle_docs,
+    shingle_sets,
     simhash_fingerprint,
     simhash_near_pairs,
 )
@@ -78,15 +78,16 @@ def run_suite(spark, scale: int) -> dict[str, float]:
     out: dict[str, float] = {}
 
     def lsh_pairs():
-        shingled = shingle_docs(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
-        sigs = minhash_from_shingles(shingled, "doc_id", bands=4, rows_per_band=2)
-        return lsh_candidate_pairs(sigs, "doc_id"), shingled
+        sets = shingle_sets(docs, "doc_id", "text", k=3).localCheckpoint(eager=False)
+        rows = sets.select("doc_id", F.explode("__sh").alias("__s"))
+        sigs = minhash_from_shingles(rows, "doc_id", bands=4, rows_per_band=2)
+        return lsh_candidate_pairs(sigs, "doc_id"), sets
 
     out["minhash_lsh_pairs"] = timed("minhash_lsh_pairs", scale, lambda: lsh_pairs()[0])
 
     def jaccard():
-        pairs, shingled = lsh_pairs()
-        return ngram_jaccard(pairs, docs, "doc_id", "text", k=3, shingled=shingled)
+        pairs, sets = lsh_pairs()
+        return ngram_jaccard(pairs, docs, "doc_id", "text", k=3, sets=sets)
 
     out["ngram_jaccard"] = timed("ngram_jaccard", scale, jaccard)
 
