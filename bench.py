@@ -15,7 +15,6 @@ commit so the next round can diff per-query.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import re
@@ -24,6 +23,11 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+from designing_data_warehouse_in_sql_server_spark.session import (  # noqa: E402
+    checkpoint_scope,
+    get_spark,
+)
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -45,22 +49,15 @@ def warm_up(spark, qs: dict, warm_dir: str) -> None:
     message; the warm-up itself never fails the bench."""
     for name in sorted(qs):
         try:
-            df = qs[name](spark, warm_dir)
-            df.write.format("noop").mode("overwrite").save()
+            with checkpoint_scope(spark):
+                qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
         except Exception as exc:
             first_line = str(exc).split("\n", 1)[0]
             print(f"warm-up {name}: {type(exc).__name__}: {first_line}", file=sys.stderr)
-        # Release the query's JVM-side references (checkpoint RDD
-        # blocks, broadcasts) before the next one — see the timed
-        # loop in main for the measured rationale.
-        df = None
-        gc.collect()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from designing_data_warehouse_in_sql_server_spark.session import get_spark
-
     spark = get_spark("ddw-bench")
     import __spark_entry__ as entrymod
 
@@ -101,25 +98,13 @@ def main() -> None:
     for name in names:
         best, worst = float("inf"), 0.0
         for _ in range(n_trials):
-            start = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            sec = time.perf_counter() - start
+            # the query's checkpoints are released when the block exits,
+            # after the timed region
+            with checkpoint_scope(spark):
+                start = time.perf_counter()
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+                sec = time.perf_counter() - start
             best, worst = min(best, sec), max(worst, sec)
-            # MEASUREMENT-BUG FIX (r11, guide §1 / §5): drop the
-            # DataFrame reference and collect OUTSIDE the timed region.
-            # Eager localCheckpoint blocks and broadcasts stay pinned in
-            # the block manager until their py4j proxies are collected;
-            # across a 266-query pass they accumulate, execution memory
-            # shrinks, and later queries pay GC/spill pressure CAUSED BY
-            # EARLIER QUERIES — the long-observed "driver tail hotter
-            # than quiet pass" artifact. Measured on identical code:
-            # full pass 294.7 s without this, 238.3 s with it; a 45-query
-            # subset re-measured solo matches the with-GC numbers, so
-            # the delta is leak pressure, not compute. The timed region
-            # (construction + noop write, best-of-N) is unchanged.
-            df = None
-            gc.collect()
         timings[name] = round(best, 3)
         if n_trials > 1 and best > 0:
             spread_worst = max(spread_worst, worst / best)

@@ -23,6 +23,10 @@ is localCheckpoint-ed to truncate lineage (swap for reliable
 SCALE; 85 * mass must stay < 2^63, so SCALE=1e9 is safe to ~1e8 nodes —
 beyond that lower SCALE or move the sum to decimal(38,0).
 
+The returned plans read their (per-round) checkpoints, so no operator
+here releases one: the code that runs the query does, when its
+``session.checkpoint_scope`` exits.
+
 Reference parity: the reference warehouse has no graph operator — this
 is a labeled extension (SURVEY.md §2.11) for the 100 TB pipeline brief.
 """

@@ -13,15 +13,14 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
+from pyspark.sql import Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from ..operators.cleaning import cap_outliers_zscore, dedupe, impute_group_mean
-from ..operators.dedup_text import release_checkpoint
 from ..operators.ids import assign_sequential_ids
 from ..operators.watermark import high_watermarks
-from ..session import local_frame
+from ..session import checkpoint_scope, local_frame
 from ..sources.http_api import Fetcher, extract_incremental
 from ..sources.table_store import TableStore
 
@@ -144,97 +143,88 @@ def transform_load(spark: SparkSession, store: TableStore, load_ts: str) -> None
         update_filter=unprocessed,
         rows_per_group_hint=n_staging,
     )
-    # The cleaned UNPROCESSED slice feeds three consumers below (the
-    # new-city probe, the dim-merge insert source, and the fact-merge
-    # source) — without a materialization the dedup->impute->cap window
-    # chain re-executes per consumer. Checkpoint the filtered slice
-    # only (the stats windows still see every row; the processed branch
-    # is never consumed downstream, so materializing it would be pure
-    # waste). Eager, so its job completes the observation above whatever
-    # the session's AQE setting (a lazy checkpoint of a plan with no
-    # materialized exchange reports the metric before any row is read);
-    # the relation is increment-sized. On a cluster swap for reliable
-    # checkpoint where executor loss must be survivable.
-    cleaned_unproc = cleaned.filter(unprocessed).localCheckpoint(eager=True)
-    try:
-        _load(store, cleaned_unproc, load_ts, n_staging)
-    finally:
-        release_checkpoint(cleaned_unproc)
+    with checkpoint_scope(spark):
+        # The cleaned UNPROCESSED slice feeds three consumers below (the
+        # new-city probe, the dim-merge insert source, and the fact-merge
+        # source) — without a materialization the dedup->impute->cap window
+        # chain re-executes per consumer. Checkpoint the filtered slice
+        # only (the stats windows still see every row; the processed branch
+        # is never consumed downstream, so materializing it would be pure
+        # waste). Eager, so its job completes the observation above whatever
+        # the session's AQE setting (a lazy checkpoint of a plan with no
+        # materialized exchange reports the metric before any row is read);
+        # the relation is increment-sized. On a cluster swap for reliable
+        # checkpoint where executor loss must be survivable.
+        cleaned_unproc = cleaned.filter(unprocessed).localCheckpoint(eager=True)
+
+        # 4. dim upsert, insert-only (J4): unseen cities get a surrogate key;
+        #    other attributes stay NULL exactly like the reference MERGE
+        #    (transform_load.sql:47, commentary README.md:285-293)
+        dim = store.read(DIM)
+        new_cities = (
+            cleaned_unproc
+            .select("city_name")
+            .distinct()
+            .join(dim.filter(F.col("is_current")).select("city_name"), "city_name", "left_anti")
+        )
+        if new_cities.take(1):
+            max_id = dim.agg(F.max("city_id")).first()[0] or 0
+            w = W.orderBy("city_name")  # few new keys; single-partition window is fine
+            inserts = new_cities.select(
+                (F.row_number().over(w) + F.lit(max_id)).alias("city_id"),
+                "city_name",
+                F.lit(None).cast("string").alias("country"),
+                F.lit(None).cast("decimal(9,6)").alias("latitude"),
+                F.lit(None).cast("decimal(9,6)").alias("longitude"),
+                F.lit(None).cast("string").alias("timezone"),
+                F.lit(load_ts).cast("timestamp_ntz").alias("valid_from"),
+                F.lit("9999-12-31").cast("timestamp_ntz").alias("valid_to"),
+                F.lit(True).alias("is_current"),
+            )
+            store.merge(DIM, inserts, on=["city_name"], insert_only=True, capture_cdc=False)
+            dim = store.read(DIM)
+
+        # 5. fact merge on (city_id, date) (J2 surrogate lookup + J5 upsert)
+        fact = store.read(FACT)
+        max_wid = fact.agg(F.max("weather_id")).first()[0] or 0
+        src = (
+            cleaned_unproc
+            .join(
+                F.broadcast(
+                    dim.filter(F.col("is_current")).select("city_id", "city_name")
+                ),
+                "city_name",
+            )
+            .select(
+                "city_id",
+                "date",
+                # imputation/capping widen the decimals (avg -> decimal(9,6));
+                # cast back so the fact schema stays DECIMAL(5,2) like the DDL
+                F.col("temp_max").cast("decimal(5,2)").alias("temp_max"),
+                F.col("temp_min").cast("decimal(5,2)").alias("temp_min"),
+                F.col("precipitation").cast("decimal(5,2)").alias("precipitation"),
+                F.lit(load_ts).cast("timestamp_ntz").alias("load_timestamp"),
+            )
+        )
+        # size-adaptive id assignment: the staging footer count is a free
+        # upper bound on the increment, so small runs take the single-window
+        # form (no two-phase offsets collect job) and large ones the
+        # range-partitioned form — the one task that kills the job at scale
+        # (see operators/ids.py); both are bit-identical, property-tested
+        src = assign_sequential_ids(
+            src, "weather_id", ["city_id", "date"], start=max_wid, n_hint=n_staging
+        )
+        # keep existing surrogate ids for matched rows: weather_id not updated
+        store.merge(
+            FACT,
+            src,
+            on=["city_id", "date"],
+            update_cols=["temp_max", "temp_min", "precipitation", "load_timestamp"],
+        )
 
     # 6. mark ALL staging rows processed (M4 — no WHERE in the reference)
     store.update(STG, {"is_processed": F.lit(True)})
     _log_stage(store, load_ts, "transform_load", seen.get["n"], time.monotonic() - t0)
-
-
-def _load(
-    store: TableStore, cleaned_unproc: DataFrame, load_ts: str, n_staging: int
-) -> None:
-    """Steps 4-5 of transform_load: the dim upsert and the fact merge,
-    both fed by the checkpointed cleaned slice of unprocessed rows."""
-    # 4. dim upsert, insert-only (J4): unseen cities get a surrogate key;
-    #    other attributes stay NULL exactly like the reference MERGE
-    #    (transform_load.sql:47, commentary README.md:285-293)
-    dim = store.read(DIM)
-    new_cities = (
-        cleaned_unproc
-        .select("city_name")
-        .distinct()
-        .join(dim.filter(F.col("is_current")).select("city_name"), "city_name", "left_anti")
-    )
-    if new_cities.take(1):
-        max_id = dim.agg(F.max("city_id")).first()[0] or 0
-        w = W.orderBy("city_name")  # few new keys; single-partition window is fine
-        inserts = new_cities.select(
-            (F.row_number().over(w) + F.lit(max_id)).alias("city_id"),
-            "city_name",
-            F.lit(None).cast("string").alias("country"),
-            F.lit(None).cast("decimal(9,6)").alias("latitude"),
-            F.lit(None).cast("decimal(9,6)").alias("longitude"),
-            F.lit(None).cast("string").alias("timezone"),
-            F.lit(load_ts).cast("timestamp_ntz").alias("valid_from"),
-            F.lit("9999-12-31").cast("timestamp_ntz").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        store.merge(DIM, inserts, on=["city_name"], insert_only=True, capture_cdc=False)
-        dim = store.read(DIM)
-
-    # 5. fact merge on (city_id, date) (J2 surrogate lookup + J5 upsert)
-    fact = store.read(FACT)
-    max_wid = fact.agg(F.max("weather_id")).first()[0] or 0
-    src = (
-        cleaned_unproc
-        .join(
-            F.broadcast(
-                dim.filter(F.col("is_current")).select("city_id", "city_name")
-            ),
-            "city_name",
-        )
-        .select(
-            "city_id",
-            "date",
-            # imputation/capping widen the decimals (avg -> decimal(9,6));
-            # cast back so the fact schema stays DECIMAL(5,2) like the DDL
-            F.col("temp_max").cast("decimal(5,2)").alias("temp_max"),
-            F.col("temp_min").cast("decimal(5,2)").alias("temp_min"),
-            F.col("precipitation").cast("decimal(5,2)").alias("precipitation"),
-            F.lit(load_ts).cast("timestamp_ntz").alias("load_timestamp"),
-        )
-    )
-    # size-adaptive id assignment: the staging footer count is a free
-    # upper bound on the increment, so small runs take the single-window
-    # form (no two-phase offsets collect job) and large ones the
-    # range-partitioned form — the one task that kills the job at scale
-    # (see operators/ids.py); both are bit-identical, property-tested
-    src = assign_sequential_ids(
-        src, "weather_id", ["city_id", "date"], start=max_wid, n_hint=n_staging
-    )
-    # keep existing surrogate ids for matched rows: weather_id not updated
-    store.merge(
-        FACT,
-        src,
-        on=["city_id", "date"],
-        update_cols=["temp_max", "temp_min", "precipitation", "load_timestamp"],
-    )
 
 
 def run_pipeline(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.dedup_text import word_grams, words_col
+from ..session import release_checkpoint
 from ..sources.parquet import load_table, table_row_count
 from .registry import register
 
@@ -3426,19 +3427,17 @@ def _bpe_merge_loop(
     and `cnt`; any extra columns (e.g. the original word, for the
     encoder) ride through untouched. Returns (merge rules, the
     vocabulary after all merges)."""
-    from ..operators.dedup_text import release_checkpoint
-
     rules: list[tuple[int, str, int]] = []
     # Checkpoint the INITIAL vocabulary too: each iteration's argmax job
     # materializes that iteration's lazily-checkpointed `cur`, but the
     # seed vocabulary (corpus scan + word aggregate) was outside the
     # chain, so iterations 1 AND 2 both re-derived it from the corpus.
     cur = cur.localCheckpoint(eager=False)
-    # checkpoint-lifecycle (VERDICT r11 #7): once iteration N's argmax
-    # has materialized cur(N), cur(N)'s parent checkpoint is dead —
-    # release its blocks instead of pinning them for the session. The
-    # FINAL cur stays lazy and still reads its materialized parent, so
-    # the last parent is never released here.
+    # once iteration N's argmax has materialized cur(N), cur(N)'s parent
+    # checkpoint is dead: release its blocks now instead of pinning one
+    # vocabulary per merge until the caller's scope exits. The FINAL cur
+    # stays lazy and still reads its materialized parent, so the last
+    # parent is left to that scope.
     parent: DataFrame | None = None
     for it in range(1, n_merges + 1):
         # adjacent symbol pairs are the symbol 2-grams (symbols hold no
@@ -3467,9 +3466,8 @@ def _bpe_merge_loop(
         cur = cur.withColumn("s", F.replace(F.col("s"), pat, rep)).localCheckpoint(
             eager=False
         )
-    # NOTE: `parent` (the last materialized vocabulary) deliberately NOT
-    # released — the returned lazy `cur` reads it when the consumer
-    # materializes.
+    # `parent` (the last materialized vocabulary) is not released here:
+    # the returned lazy `cur` reads it when the consumer materializes.
     return rules, cur
 
 

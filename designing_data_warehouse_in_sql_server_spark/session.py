@@ -22,10 +22,16 @@ holds one workload's working set and no more: 256 entries measured +4%
 
 from __future__ import annotations
 
+import logging
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "ddw-spark", cpus: int | None = None) -> SparkSession:
@@ -72,3 +78,46 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> D
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema=schema)
+
+
+@contextmanager
+def checkpoint_scope(spark: SparkSession) -> Iterator[None]:
+    """Unpersist, on every exit path, each RDD persisted inside the block.
+
+    A registry callable returns a lazy plan that reads its
+    ``localCheckpoint`` blocks later, so the code that runs the query owns
+    them and must read the result inside the block: a released checkpoint
+    has no lineage to recompute from. The diff of ``getPersistentRDDs()``
+    is exact because the package persists nothing except through
+    ``localCheckpoint`` (a test guards this) and never runs two queries at
+    once. RDDs persisted before the block stay; a refused release is
+    logged, and its blocks stay pinned."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                try:
+                    rdd.unpersist(False)
+                except Py4JError:
+                    _log.warning("checkpoint_scope: unpersist of RDD %s failed", rdd_id, exc_info=True)
+
+
+def release_checkpoint(df: DataFrame | None) -> None:
+    """Release a superseded loop iterate's checkpoint before its scope ends
+    (``connected_components``, the BPE merge loop), so a loop does not pin
+    one checkpoint per round. Only for a checkpoint this code created and
+    no live DataFrame reads again. No-op when ``df`` is not a bare
+    checkpoint handle (its analyzed plan is not a LogicalRDD) or is
+    already released; a refused release is logged."""
+    if df is None:
+        return
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() != "LogicalRDD":
+            return  # not a bare checkpoint handle
+        plan.rdd().unpersist(False)
+    except Py4JError:
+        _log.warning("release_checkpoint: unpersist failed", exc_info=True)

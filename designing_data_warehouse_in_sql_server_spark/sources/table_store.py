@@ -59,6 +59,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import checkpoint_scope
+
 CDC_INSERT = "insert"
 CDC_UPDATE_PRE = "update_preimage"
 CDC_UPDATE_POST = "update_postimage"
@@ -1465,8 +1467,6 @@ class TableStore:
         columns functionally dependent on the merge keys (a key never
         moves between partitions).
         """
-        from ..operators.dedup_text import release_checkpoint
-
         target = self.read(name)
 
         spec = self.partition_spec(name)
@@ -1495,19 +1495,6 @@ class TableStore:
         for k in on:
             c = F.col(f"t.{k}") == F.col(f"s.{k}")
             cond = c if cond is None else (cond & c)
-        joined = t.join(s, cond, "full_outer")
-        if capture_cdc:
-            # The joined relation feeds the staged write AND the change
-            # feed's insert/post/pre branches — without a materialization
-            # the full-outer join re-executes per consumer (up to 4x;
-            # measured on the end-to-end pipeline's fact merge). Delta's
-            # CDF likewise derives change rows and the new snapshot from
-            # ONE join pass. Lazy local checkpoint: the staged write
-            # materializes it; with partition pruning it is bounded by
-            # the touched partitions. On a cluster swap for reliable
-            # checkpoint where executor loss must be survivable.
-            joined = joined.localCheckpoint(eager=False)
-
         data_cols = [c for c in target.columns if c not in on]
         if update_cols is None:
             upd = [c for c in data_cols if c in source_cols]
@@ -1539,9 +1526,21 @@ class TableStore:
             .when(matched & ~F.lit(insert_only), F.lit("update"))
             .otherwise(F.lit("keep"))
         )
-        result = joined.select(*out_cols, action.alias("__action"))
+        joined = t.join(s, cond, "full_outer")
+        with checkpoint_scope(self.spark):
+            if capture_cdc:
+                # The joined relation feeds the staged write AND the change
+                # feed's insert/post/pre branches — without a materialization
+                # the full-outer join re-executes per consumer (up to 4x;
+                # measured on the end-to-end pipeline's fact merge). Delta's
+                # CDF likewise derives change rows and the new snapshot from
+                # ONE join pass. Lazy local checkpoint: the staged write
+                # materializes it; with partition pruning it is bounded by
+                # the touched partitions. On a cluster swap for reliable
+                # checkpoint where executor loss must be survivable.
+                joined = joined.localCheckpoint(eager=False)
+            result = joined.select(*out_cols, action.alias("__action"))
 
-        try:
             try:
                 v, vdir, read_schema = self._stage_version(name, result.drop("__action"))
             except Exception as ex:
@@ -1558,9 +1557,6 @@ class TableStore:
             # phantom version.
             if capture_cdc:
                 self._log_cdc(name, result, joined, on, data_cols, insert_only, v)
-        finally:
-            if capture_cdc:
-                release_checkpoint(joined)  # its last reader was _log_cdc
         return v
 
     # -- CDC (S8: Delta Change Data Feed analog) --------------------------------

@@ -199,9 +199,7 @@ def test_release_checkpoint_logs_a_refused_release(spark, caplog):
     logged instead of swallowed."""
     from py4j.protocol import Py4JError
 
-    from designing_data_warehouse_in_sql_server_spark.operators.dedup_text import (
-        release_checkpoint,
-    )
+    from designing_data_warehouse_in_sql_server_spark.session import release_checkpoint
 
     class _Refusing:
         class _jdf:
@@ -209,13 +207,124 @@ def test_release_checkpoint_logs_a_refused_release(spark, caplog):
             def queryExecution():
                 raise Py4JError("refused")
 
-    logger = "designing_data_warehouse_in_sql_server_spark.operators.dedup_text"
+    logger = "designing_data_warehouse_in_sql_server_spark.session"
     with caplog.at_level("WARNING", logger=logger):
         release_checkpoint(spark.range(3))
         release_checkpoint(None)
         release_checkpoint(_Refusing())
     got = [(r.levelname, r.getMessage()) for r in caplog.records if r.name == logger]
     assert got == [("WARNING", "release_checkpoint: unpersist failed")]
+
+
+def _pinned(spark) -> set:
+    """Persistent RDD ids. Compare with ``<=``: Spark's ContextCleaner may
+    unpersist an RDD an earlier test left behind at any moment."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_checkpoint_scope_keeps_what_was_persisted_before(spark):
+    """Only RDDs persisted inside the block are released: a checkpoint
+    taken before it stays readable. A released checkpoint has no lineage
+    to recompute from, so its frame cannot be read after the block."""
+    import pytest
+
+    from designing_data_warehouse_in_sql_server_spark.session import (
+        checkpoint_scope,
+        release_checkpoint,
+    )
+
+    outer = spark.range(10).localCheckpoint(eager=True)
+    before = _pinned(spark)
+    with checkpoint_scope(spark):
+        inner = spark.range(5).localCheckpoint(eager=True)
+        assert inner.count() == 5
+        assert len(_pinned(spark) - before) == 1
+    assert _pinned(spark) <= before
+    assert outer.count() == 10
+    with pytest.raises(Exception, match="Checkpoint block"):
+        inner.collect()
+    release_checkpoint(outer)
+
+
+def test_nested_checkpoint_scope_releases_only_its_own(spark):
+    from designing_data_warehouse_in_sql_server_spark.session import checkpoint_scope
+
+    before = _pinned(spark)
+    with checkpoint_scope(spark):
+        outer = spark.range(10).localCheckpoint(eager=True)
+        with_outer = _pinned(spark)
+        with checkpoint_scope(spark):
+            inner = spark.range(4).localCheckpoint(eager=True)
+            assert outer.join(inner, "id").count() == 4
+            assert len(_pinned(spark) - with_outer) == 1
+        assert _pinned(spark) <= with_outer
+        assert outer.count() == 10
+    assert _pinned(spark) <= before
+
+
+def test_checkpoint_scope_releases_on_an_exception(spark):
+    import pytest
+
+    from designing_data_warehouse_in_sql_server_spark.session import checkpoint_scope
+
+    before = _pinned(spark)
+    with pytest.raises(ZeroDivisionError):
+        with checkpoint_scope(spark):
+            spark.range(3).localCheckpoint(eager=False)
+            assert len(_pinned(spark) - before) == 1
+            1 / 0
+    assert _pinned(spark) <= before
+
+
+def test_checkpoint_scope_logs_a_refused_release(caplog):
+    """A release the JVM refuses is logged, and the scope still releases
+    the other RDDs it owns."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    from designing_data_warehouse_in_sql_server_spark.session import checkpoint_scope
+
+    class _Rdd:
+        def __init__(self, refuse: bool):
+            self.refuse, self.released = refuse, False
+
+        def unpersist(self, blocking):
+            if self.refuse:
+                raise Py4JError("refused")
+            self.released = True
+
+    persisted = {1: _Rdd(False)}
+    jsc = SimpleNamespace(getPersistentRDDs=lambda: dict(persisted))
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc))
+    logger = "designing_data_warehouse_in_sql_server_spark.session"
+    with caplog.at_level("WARNING", logger=logger):
+        with checkpoint_scope(fake):
+            persisted[2] = _Rdd(True)
+            persisted[3] = _Rdd(False)
+    got = [r.getMessage() for r in caplog.records if r.name == logger]
+    assert got == ["checkpoint_scope: unpersist of RDD 2 failed"]
+    assert [persisted[i].released for i in (1, 3)] == [False, True]
+
+
+def test_package_persists_only_through_local_checkpoint():
+    """checkpoint_scope releases the diff of the persistent-RDD set, which
+    is exact only while the package persists nothing except through
+    localCheckpoint: a .persist(), .cache() or cached table would be
+    released by the scope of whichever query ran first."""
+    import re
+    from pathlib import Path
+
+    import designing_data_warehouse_in_sql_server_spark as pkg
+
+    banned = re.compile(r"\.persist\(|\.cache\(\)|cacheTable|CACHE\s+TABLE", re.IGNORECASE)
+    hits = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in Path(pkg.__file__).parent.rglob("*.py")
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, hits
 
 
 def test_segment_dedup_first_wins_and_vanishing_doc(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from designing_data_warehouse_in_sql_server_spark.session import checkpoint_scope
 from tests.conftest import SF_DIR
 from tests.oracle_diff import compare
 
@@ -40,17 +41,32 @@ def test_check_first_names_resolve():
 QS, ORACLES = _registry()
 
 
+def _pinned(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+# Each query runs inside checkpoint_scope, the way bench.py runs it, and
+# must leave no RDD persisted that was not persisted before it: the scope
+# released everything the query pinned. The set may shrink meanwhile,
+# because Spark's ContextCleaner unpersists RDDs that earlier, unscoped
+# tests left behind once the JVM collects them.
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(spark, name):
-    df = QS[name](spark, SF_DIR)
-    problems = compare(df, ORACLES[name], SF_DIR)
+    before = _pinned(spark)
+    with checkpoint_scope(spark):
+        df = QS[name](spark, SF_DIR)
+        problems = compare(df, ORACLES[name], SF_DIR)
     assert not problems, f"{name}: {problems}"
+    assert _pinned(spark) <= before
 
 
 @pytest.mark.parametrize("name", sorted(set(QS) - set(ORACLES)))
 def test_rows_only(spark, name):
-    df = QS[name](spark, SF_DIR)
-    assert df.count() >= 0
+    before = _pinned(spark)
+    with checkpoint_scope(spark):
+        df = QS[name](spark, SF_DIR)
+        assert df.count() >= 0
+    assert _pinned(spark) <= before
 
 
 def test_entry(spark):
