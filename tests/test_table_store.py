@@ -1462,3 +1462,158 @@ def test_optimize_zorder_on_a_decimal_column_keeps_its_files(spark, store):
     got = sorted(store.read_skipping(p, "amt", lo, hi).collect())
     want = sorted(store.read(p).filter(F.col("amt").between(lo, hi)).collect())
     assert got == want and len(want) == 13
+
+
+# -- feed equivalence: one DML sequence, every version pinned -----------------
+_FEED_COLS = ("k", "p", "v", "s", "_change_type", "_commit_version")
+_FEED_ROWS = [
+    # merge: one update, one insert
+    (4, "b", 40, None, "insert", 2),
+    (2, "a", 20, None, "update_preimage", 2),
+    (2, "a", 21, None, "update_postimage", 2),
+    (5, "b", 50, None, "insert", 3),  # append
+    (6, "a", 60, "x", "insert", 4),  # evolving append (adds s)
+    (7, "b", None, None, "insert", 5),  # omitting append (no v, no s)
+    # update where p = 'a'
+    (1, "a", 10, None, "update_preimage", 6),
+    (2, "a", 21, None, "update_preimage", 6),
+    (6, "a", 60, "x", "update_preimage", 6),
+    (1, "a", 11, None, "update_postimage", 6),
+    (2, "a", 22, None, "update_postimage", 6),
+    (6, "a", 61, "x", "update_postimage", 6),
+    # truncate
+    (1, "a", 11, None, "delete", 7),
+    (2, "a", 22, None, "delete", 7),
+    (3, "b", 30, None, "delete", 7),
+    (4, "b", 40, None, "delete", 7),
+    (5, "b", 50, None, "delete", 7),
+    (6, "a", 61, "x", "delete", 7),
+    (7, "b", None, None, "delete", 7),
+    # overwrite of the empty table
+    (8, "a", 80, None, "insert", 8),
+    (9, "b", 90, None, "insert", 8),
+    # restore to v4: delete of the current rows, insert of v4's
+    (8, "a", 80, None, "delete", 9),
+    (9, "b", 90, None, "delete", 9),
+    (1, "a", 10, None, "insert", 9),
+    (2, "a", 21, None, "insert", 9),
+    (3, "b", 30, None, "insert", 9),
+    (4, "b", 40, None, "insert", 9),
+    (5, "b", 50, None, "insert", 9),
+    (6, "a", 60, "x", "insert", 9),
+]
+_TABLE_HISTORY = [
+    (1, "overwrite", 3), (2, "merge", 4), (3, "append", 5), (4, "append", 6),
+    (5, "append", 7), (6, "update", 7), (7, "truncate", 0), (8, "overwrite", 2),
+    (9, "restore", 6),
+]
+
+
+def _parquet_files(store, name, v):
+    import glob
+
+    vdir = os.path.join(store.root, name, f"v{v}")
+    return glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
+
+
+def _norm(rows, cols):
+    """Rows as tuples over ``cols`` (a column a version lacks reads None),
+    sorted by repr so None sorts beside numbers."""
+    return sorted((tuple(r.asDict().get(c) for c in cols) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_feed_equivalence_over_one_dml_sequence(spark, store, partitioned):
+    """One DML sequence on a CDC table, plain (feed started by
+    enable_cdc) and hive-partitioned (feed started by the first merge),
+    pins every version of the table, its change feed and a clone: the
+    exact change rows, each version's content (replayed from the feed),
+    the history rows without ts, the logged schemas, and the stream
+    directory, which must hold exactly the files each feed commit
+    staged, matched by inode, each once."""
+    sch = "k int, p string, v int"
+    base = _df(spark, [(1, "a", 10), (2, "a", 20), (3, "b", 30)], sch)
+    store.overwrite("t", base, partition_by=["p"] if partitioned else None)
+    if not partitioned:
+        store.enable_cdc("t")
+    store.merge("t", _df(spark, [(2, "a", 21), (4, "b", 40)], sch), on=["k"])
+    store.append("t", _df(spark, [(5, "b", 50)], sch))
+    store.append(
+        "t", _df(spark, [(6, "a", 60, "x")], sch + ", s string"), merge_schema=True
+    )
+    store.append("t", _df(spark, [(7, "b")], "k int, p string"), merge_schema=True)
+    store.update("t", {"v": F.col("v") + 1}, where=F.col("p") == "a")
+    store.truncate("t")
+    store.overwrite("t", _df(spark, [(8, "a", 80), (9, "b", 90)], sch))
+    store.restore("t", 4)
+    store.clone("t", "c")
+    cdc = store._cdc_table("t")
+
+    got = _norm(store.read_changes("t").collect(), _FEED_COLS)
+    assert got == sorted(_FEED_ROWS, key=repr)
+
+    # every table version equals v1 plus the feed's changes replayed
+    from collections import Counter
+
+    cols = _FEED_COLS[:4]
+    content = Counter(_norm(store.time_travel("t", 1).collect(), cols))
+    assert sorted(content, key=repr) == [
+        (1, "a", 10, None), (2, "a", 20, None), (3, "b", 30, None)
+    ]
+    for v in range(2, 10):
+        for *row, kind, cv in _FEED_ROWS:
+            if cv == v:
+                sign = 1 if kind in ("insert", "update_postimage") else -1
+                content[tuple(row)] += sign
+        want = sorted(content.elements(), key=repr)
+        assert _norm(store.time_travel("t", v).collect(), cols) == want, v
+    assert _norm(store.read("c").collect(), cols) == want
+
+    def history(name):
+        rows = sorted(store.history(name), key=lambda e: e["version"])
+        for e in rows:  # the file count is what the version holds on disk
+            assert e["num_files"] == len(_parquet_files(store, name, e["version"]))
+        return [(e["version"], e["op"], e["num_rows"]) for e in rows]
+
+    assert history("t") == _TABLE_HISTORY
+    assert history("c") == [(1, "clone", 6)]
+    feed_rows = [0] if not partitioned else []
+    for v in range(2, 10):
+        feed_rows.append(sum(1 for r in _FEED_ROWS if r[-1] <= v))
+    feed_ops = ["cdc-init"] * (not partitioned) + ["cdc-append"] * 8
+    assert history(cdc) == [
+        (i + 1, op, n) for i, (op, n) in enumerate(zip(feed_ops, feed_rows))
+    ]
+
+    def schemas(name):
+        cur = store.current_version(name)
+        return [
+            None if s is None else s.simpleString()
+            for s in (store.table_schema(name, v) for v in range(1, cur + 1))
+        ]
+
+    four = "k:int,v:int,p:string,s:string" if partitioned else "k:int,p:string,v:int,s:string"
+    truncated = "k:int,v:int,s:string,p:string" if partitioned else four
+    evolved, reshaped = f"struct<{four}>", "struct<k:int,p:string,v:int>"
+    assert schemas("t") == [None] * 3 + [evolved] * 3 + [
+        f"struct<{truncated}>", reshaped, evolved
+    ]
+    assert schemas("c") == [evolved]
+    head = "k:int,v:int,p:string" if partitioned else "k:int,p:string,v:int"
+    feed = f"struct<{head},_change_type:string,_commit_version:int,s:string>"
+    logged_from = 3 if partitioned else 4  # the feed version of table v4
+    assert schemas(cdc) == [None] * (logged_from - 1) + [feed] * (
+        len(feed_ops) - logged_from + 1
+    )
+
+    # the stream directory: each feed append's staged files, once each
+    def inodes(name, v):
+        return {os.stat(p).st_ino for p in _parquet_files(store, name, v)}
+
+    staged = []
+    for i, op in enumerate(feed_ops, start=1):
+        if op == "cdc-append":
+            staged += sorted(inodes(cdc, i) - (inodes(cdc, i - 1) if i > 1 else set()))
+    stream = os.path.join(store.root, "_cdc_stream", "t")
+    got = [os.stat(os.path.join(stream, f)).st_ino for f in os.listdir(stream)]
+    assert sorted(got) == sorted(staged) and len(set(got)) == len(got)
