@@ -17,31 +17,40 @@ Reference parity:
 - M4 flag update (transform_load.sql:73) -> update()
 - System-versioned history (README.md:88-91) -> time_travel()
 
-Scale notes:
+Scale notes — one write path:
+- Every version is produced by one sequence: stage the new files
+  (_stage_version, or optimize's layout write), hard-link the files the
+  version keeps from an earlier one, then commit. Two walkers do all the
+  linking: _link_all (every file of a version: append, restore, clone)
+  and _link_untouched (the partitions a pruned merge/update did not
+  write). The commit's file and row counts come from the staged files
+  plus the link walk, with inode-cached footers, so no commit re-walks
+  the finished version. _write_version is that sequence for Spark
+  writes; restore and clone link without a Spark job.
 - append() is O(increment): only the new rows are written; every file of
-  the previous version is hard-linked into the new version (parquet part
-  file names embed a per-job UUID, so links never collide). A daily
-  append to a 100 TB table costs one day of data, not one table.
+  the previous version is linked (parquet part file names embed a
+  per-job UUID, so links never collide). A daily append to a 100 TB
+  table costs one day of data, not one table.
 - merge() is a single full-outer shuffle join on the merge keys plus a
   rewrite of the target. The duplicate-source-key check rides inside the
   same job (a window count over the merge keys whose exchange is reused
   by the join), not a separate pre-flight action. Tables created with
   ``partition_by`` get the Delta-style pruned merge: only partitions
   present in the source are joined and rewritten; every untouched
-  partition's files are hard-linked from the previous version (no read,
-  no write, no copy). At 100 TB with a date-partitioned fact and daily
-  increments, a merge touches one partition out of thousands — the
-  rewrite cost is proportional to the increment, not the table.
-  Partition columns must be functionally dependent on the merge keys
-  (e.g. partition year derives from a key date) so a key can never move
-  across partitions; this is the same contract Delta's partition-pruned
-  MERGE relies on.
-- update() with a ``where`` that lands in a subset of partitions
-  rewrites only those partitions (same hard-link reuse as merge).
-- The change feed (CDC) is itself appended O(increment), and is written
-  AFTER the main table version commits — a failed write can lose a feed
-  entry for a committed version (consumer re-derives from a snapshot)
-  but can never emit a phantom entry for a version that never existed.
+  partition is linked (no read, no write, no copy), so with a
+  date-partitioned fact and daily increments the rewrite cost is
+  proportional to the increment, not the table. Partition columns must
+  be functionally dependent on the merge keys (e.g. partition year
+  derives from a key date) so a key can never move across partitions;
+  this is the same contract Delta's partition-pruned MERGE relies on.
+  update() with a ``where`` that lands in a subset of partitions
+  rewrites only those partitions the same way.
+- The change feed (CDC) is the table ``_cdc__<name>``, appended by
+  append's own code (O(increment)) AFTER the main table version commits:
+  a failed write can lose a feed entry for a committed version (consumer
+  re-derives from a snapshot) but never emits a phantom entry for a
+  version that never existed. Each feed commit's staged files are also
+  linked into the append-only stream directory (change_stream_dir).
 - CDC capture: merge() always captures (it starts the feed on first
   use); update()/append()/truncate()/overwrite() capture their changes
   too once a feed exists for the table (Delta-CDF parity: every DML is
@@ -144,7 +153,7 @@ def _is_dup_key_error(ex: Exception) -> bool:
 # int()/float() are LAXER (underscores '1_000', 'nan'/'inf', 'infinity')
 # and typing a value Python-numerically that Spark reads as a string
 # would give the skipping manifest the wrong type — numeric-vs-string
-# comparisons then crash or mis-skip (r7 high review). Anchored regexes
+# comparisons then crash or mis-skip. Anchored regexes
 # mirror Spark: optional sign, plain digits for int; digits with a
 # decimal point and/or exponent for double.
 _HIVE_INT_RE = re.compile(r"^[+-]?\d+$")
@@ -174,7 +183,8 @@ def _stats_prune(entry_stats: dict, col: str, lo, hi) -> bool:
     and a cross-type comparison (a string stat against a numeric probe
     — possible against a manifest written before per-version type
     resolution, or a probe typed differently than the partition values)
-    keeps the file instead of raising (ADVICE r7)."""
+    keeps the file instead of raising: skipping may only ever drop files,
+    never fail a read."""
     if col not in entry_stats:
         return False
     smin, smax = entry_stats[col]
@@ -187,9 +197,9 @@ def _stats_prune(entry_stats: dict, col: str, lo, hi) -> bool:
 def _resolve_partition_types(raw_maps: list[dict]) -> dict:
     """ONE inferred type per partition column across ALL files of a
     version, the way Spark's partition discovery resolves a common type
-    per column (ADVICE r7: per-file typing let p=42 land as int stats
-    beside p=a42 as string stats in the same manifest; a range probe
-    then compared int against str in Python and raised TypeError).
+    per column (per-file typing would let p=42 land as int stats beside
+    p=a42 as string stats in the same manifest; a range probe then
+    compares int against str in Python and raises TypeError).
     Lattice: int if every non-null value matches Spark's int literal
     shape, else float if every value parses numerically, else string
     for the whole column."""
@@ -219,22 +229,17 @@ class TableStore:
         # hard-link versioning means a shared inode is byte-identical
         # content, so appends / pruned merges re-read footers only for
         # their NEW files — a commit's FOOTER cost is O(changed files).
-        # Every write path carries its commit stats from the write side
-        # (staged walk + link-walk counts), so no commit re-globs the
-        # finished version; the only remaining O(table-files) work per
-        # pruned commit is the hard-link pass itself, which is inherent
+        # Every commit counts from the staged files plus the link walk,
+        # so none re-globs the finished version; the only O(table-files)
+        # work per commit is the hard-link pass itself, which is inherent
         # to the each-version-owns-its-links design. size+mtime guard
         # against an inode recycled by vacuum for a different file.
         self._footer_rows: dict[tuple[int, int, int], int] = {}
-        # memoized (num_files, num_rows) per committed version — versions
-        # are immutable once the pointer moves, so the memo never goes
-        # stale until vacuum deletes the version (which evicts it). The
-        # append paths SEED the next version's entry from the previous
-        # entry plus the just-staged increment (ADVICE r7: _log_history
-        # used to re-walk the whole version per commit; with the delta
-        # carried from the write path an append's history row costs
-        # O(increment) metadata, and a CDC-enabled append stops paying
-        # two O(table-files) walks per logical commit).
+        # (num_files, num_rows) per committed version, seeded by every
+        # commit from its write-side counts and served by row_count —
+        # versions are immutable once the pointer moves, so the memo
+        # never goes stale until vacuum or drop deletes the version
+        # (which evicts it).
         self._vstats: dict[tuple[str, int], tuple[int, int]] = {}
         # the schema each committed version reads with, keyed like
         # _vstats and safe for the same reason (versions are immutable).
@@ -267,38 +272,29 @@ class TableStore:
         """(num_files, num_rows) of a committed version from parquet
         footers — driver-side metadata only, memoized per version and
         inode-cached per file (see __init__)."""
+        key = (name, version)
+        if key not in self._vstats:
+            self._vstats[key] = self._count(self._files(self._vdir(name, version)))
+        return self._vstats[key]
+
+    def _count(self, files: list[str]) -> tuple[int, int]:
+        """(num_files, num_rows) of parquet files, from cached footers."""
+        return len(files), sum(map(self._file_rows, files))
+
+    @staticmethod
+    def _files(vdir: str) -> list[str]:
+        """Every parquet file under a version directory, partition
+        subdirectories included."""
         import glob as _glob
 
-        memo = self._vstats.get((name, version))
-        if memo is not None:
-            return memo
-        vdir = os.path.join(self._dir(name), f"v{version}")
-        files = _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
-        total = sum(self._file_rows(p) for p in files)
-        self._vstats[(name, version)] = (len(files), total)
-        return len(files), total
-
-    def _staged_append_stats(self, name: str, vdir: str) -> tuple[int, int] | None:
-        """Commit stats for a stage+link append, carried from the write
-        path: walk the JUST-STAGED files (called BEFORE _link_prev_files,
-        so the walk is O(increment)) and add the previous version's
-        memoized stats. Returns None when the previous version was never
-        walked in this process — the commit's history row then walks
-        once via _version_stats and primes the memo, making every
-        subsequent append O(increment)."""
-        import glob as _glob
-
-        prev = self.current_version(name)
-        prev_stats = (0, 0) if prev is None else self._vstats.get((name, prev))
-        if prev_stats is None:
-            return None
-        files = _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
-        rows = sum(self._file_rows(p) for p in files)
-        return (prev_stats[0] + len(files), prev_stats[1] + rows)
+        return _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
 
     # -- paths / versions ---------------------------------------------------
     def _dir(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _vdir(self, name: str, version: int) -> str:
+        return os.path.join(self._dir(name), f"v{version}")
 
     def _pointer(self, name: str) -> str:
         return os.path.join(self._dir(name), "LATEST")
@@ -317,8 +313,8 @@ class TableStore:
         self,
         name: str,
         version: int,
-        op: str = "write",
-        stats: tuple[int, int] | None = None,
+        op: str,
+        stats: tuple[int, int],
         schema=_SCHEMA_INHERIT,
         read_schema: StructType | None = None,
     ) -> None:
@@ -407,26 +403,20 @@ class TableStore:
         name: str,
         version: int,
         op: str,
-        stats: tuple[int, int] | None = None,
+        stats: tuple[int, int],
     ) -> None:
         """One JSONL event per committed version: operation, wall time,
-        file count and row count of the committed version. EVERY write
-        path passes ``stats`` carried from the write side (staged-walk
-        counts plus link-walk counts, or the previous version's memo
-        plus the staged increment — O(changed files) of footer reads);
-        the memoized/footer-cached directory walk is only a fallback for
-        stats-less callers such as a cold restore memo probe. Written
-        AFTER the pointer swap: a crash can lose a history row for a
-        committed version, never record one for a phantom version (same
-        ordering contract as the CDC feed)."""
+        file count and row count of the committed version. ``stats``
+        comes from the write side (staged files plus the link walk), so
+        a history row never walks the finished version. Written AFTER
+        the pointer swap: a crash can lose a history row for a committed
+        version, never record one for a phantom version (same ordering
+        contract as the CDC feed)."""
         import json as _json
         import time as _time
 
-        if stats is not None:
-            self._vstats[(name, version)] = stats
-            num_files, num_rows = stats
-        else:
-            num_files, num_rows = self._version_stats(name, version)
+        self._vstats[(name, version)] = stats
+        num_files, num_rows = stats
         event = {
             "version": version,
             "op": op,
@@ -468,7 +458,7 @@ class TableStore:
         memoized footer schema (see __init__), so reading a version this
         process committed submits no Spark job, and any other version
         pays one footer-inference job on its first read."""
-        vdir = os.path.join(self._dir(name), f"v{version}")
+        vdir = self._vdir(name, version)
         sch = self.table_schema(name, version) or self._read_schemas.get((name, version))
         if sch is not None:
             return self.spark.read.schema(sch).parquet(vdir)
@@ -497,16 +487,9 @@ class TableStore:
         unchanged files into new versions, so a shared inode means
         byte-identical content on both sides — those files can never
         contribute a diff row and are pruned before any read."""
-        import glob as _glob
 
         def inodes(v: int) -> dict[int, str]:
-            vdir = os.path.join(self._dir(name), f"v{v}")
-            return {
-                os.stat(p).st_ino: p
-                for p in _glob.glob(
-                    os.path.join(vdir, "**", "*.parquet"), recursive=True
-                )
-            }
+            return {os.stat(p).st_ino: p for p in self._files(self._vdir(name, v))}
 
         old, new = inodes(v_old), inodes(v_new)
         shared = old.keys() & new.keys()
@@ -580,7 +563,7 @@ class TableStore:
             elif not files:
                 df = self.time_travel(name, v).limit(0)
             else:
-                vdir = os.path.join(self._dir(name), f"v{v}")
+                vdir = self._vdir(name, v)
                 df = self.spark.read.option("basePath", vdir).parquet(*files)
             # pad columns the other version has: typed NULLs, so the
             # null-safe compare and old_/new_ projection stay uniform
@@ -733,7 +716,7 @@ class TableStore:
         are typed from directory names at read time."""
         v = (self.current_version(name) or 0) + 1
         os.makedirs(self._dir(name), exist_ok=True)
-        vdir = os.path.join(self._dir(name), f"v{v}")
+        vdir = self._vdir(name, v)
         spec = self.partition_spec(name)
         if spec:
             # Cluster rows by the partition columns before a hive-style
@@ -752,40 +735,53 @@ class TableStore:
         writer.parquet(vdir)
         return v, vdir, None if spec else written.schema
 
-    def _staged_stats(self, vdir: str) -> tuple[int, int]:
-        """(num_files, num_rows) of a just-staged version directory —
-        walked BEFORE any previous files are linked in, so the walk and
-        its footer reads are O(staged files). Every write path carries
-        commit stats from here (plus whatever its link step reports)
-        instead of re-globbing the finished version at history time
-        (VERDICT r8: the post-commit walk made commit latency grow with
-        table size, and CDC-enabled tables paid it twice)."""
-        import glob as _glob
-
-        files = _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
-        return len(files), sum(self._file_rows(p) for p in files)
-
     def _write_version(
-        self, name: str, df: DataFrame, link_untouched: bool = False, op: str = "write"
-    ) -> int:
-        v, vdir, read_schema = self._stage_version(name, df)
-        stats = self._staged_stats(vdir)
-        if link_untouched and self.partition_spec(name):
-            linked = self._link_untouched(name, vdir)
-            stats = (stats[0] + linked[0], stats[1] + linked[1])
-        # In schema-logged mode every full-content write re-logs the
-        # written shape (an overwrite may legitimately RESHAPE the
-        # table; inheriting the old log would impose phantom columns).
-        # Never-evolved tables stay out of schema-logged mode entirely.
-        schema = (
-            _nullable(df.schema)
-            if self.exists(name) and self.table_schema(name) is not None
-            else _SCHEMA_INHERIT
-        )
-        self._commit(name, v, op, stats=stats, schema=schema, read_schema=read_schema)
-        return v
+        self,
+        name: str,
+        df: DataFrame,
+        op: str,
+        link_untouched: bool = False,
+        schema=None,
+        prev_read: StructType | None = None,
+    ) -> tuple[int, list[str]]:
+        """Stage ``df`` as the next version, link what the version keeps
+        of the previous one, and commit with the staged plus linked
+        counts: the one stage -> count -> link -> commit sequence behind
+        every Spark write except optimize's layout write. What is linked:
+        - nothing, for a full-content write (overwrite, truncate,
+          compact, a table's first write);
+        - the partitions a pruned merge or update did not write, with
+          ``link_untouched`` (_link_untouched);
+        - every previous file, for an append, which passes the previous
+          version's read schema as ``prev_read`` (_link_all). The version
+          then reads with the staged schema only when the staged files
+          read like the linked ones (_same_read).
 
-    def _link_untouched(self, name: str, vdir: str) -> tuple[int, int]:
+        ``schema`` is the schema-log entry (see _log_schema). None means
+        the written shape: in schema-logged mode a full-content write
+        re-logs what it wrote (an overwrite may legitimately RESHAPE the
+        table; inheriting the old log would impose phantom columns),
+        and never-evolved tables stay out of schema-logged mode.
+
+        Returns the version and its staged files."""
+        if schema is None:
+            logged = self.table_schema(name) is not None
+            schema = _nullable(df.schema) if logged else _SCHEMA_INHERIT
+        prev = self.current_version(name)
+        v, vdir, read_schema = self._stage_version(name, df)
+        staged = self._files(vdir)
+        linked = (0, 0)
+        if prev_read is not None:
+            linked = self._link_all(self._vdir(name, prev), vdir)
+            read_schema = _same_read(read_schema, prev_read, schema)
+        elif link_untouched:
+            linked = self._link_untouched(self._vdir(name, prev), vdir)
+        n_files, n_rows = self._count(staged)
+        stats = (n_files + linked[0], n_rows + linked[1])
+        self._commit(name, v, op, stats, schema, read_schema)
+        return v, staged
+
+    def _link_untouched(self, prev_dir: str, vdir: str) -> tuple[int, int]:
         """Hard-link every partition directory of the previous version that
         the current write did not produce — file reuse, zero data motion
         (the pruned-merge fast path). A touched partition always has output
@@ -795,11 +791,7 @@ class TableStore:
         inode-cached footers, so after the first touch of a file its row
         count is a dict hit and the commit's FOOTER cost stays O(touched
         files) (the link syscalls are inherently O(untouched files))."""
-        prev = self.current_version(name)
-        if prev is None:
-            return (0, 0)
         n_files, n_rows = 0, 0
-        prev_dir = os.path.join(self._dir(name), f"v{prev}")
         for dirpath, _dirnames, filenames in os.walk(prev_dir):
             if not any(fn.endswith(".parquet") for fn in filenames):
                 continue  # not a leaf partition dir
@@ -818,24 +810,34 @@ class TableStore:
                     n_rows += self._file_rows(src)
         return (n_files, n_rows)
 
-    def _link_prev_files(self, name: str, vdir: str) -> None:
-        """Hard-link EVERY parquet file of the previous version into the
-        new version, preserving relative (partition) paths — the append
-        fast path. Per-file (not per-dir) linking merges cleanly with
-        partition dirs the new write also touched; part file names embed
-        a per-job UUID so names never collide."""
-        prev = self.current_version(name)
-        if prev is None:
-            return
-        prev_dir = os.path.join(self._dir(name), f"v{prev}")
-        for dirpath, _dirnames, filenames in os.walk(prev_dir):
-            rel = os.path.relpath(dirpath, prev_dir)
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                dst_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                os.link(os.path.join(dirpath, fn), os.path.join(dst_dir, fn))
+    def _link_all(self, src_dir: str, vdir: str) -> tuple[int, int]:
+        """Hard-link EVERY parquet file of ``src_dir`` into ``vdir`` at the
+        same relative (partition) path and return the (num_files,
+        num_rows) linked, counted with inode-cached footers as
+        _link_untouched counts. Per-file (not per-dir) links merge into
+        partition dirs the staged write also produced; part file names
+        embed a per-job UUID, so names never collide."""
+        files = self._files(src_dir)
+        for path in files:
+            dst = os.path.join(vdir, os.path.relpath(path, src_dir))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.link(path, dst)
+        return self._count(files)
+
+    def _link_version(self, name: str, version: int, src_dir: str) -> tuple[int, int]:
+        """Stage ``version`` of ``name`` as links to every file of
+        ``src_dir``: restore and clone, no Spark job. A directory already
+        there lies past the committed pointer, so it can only be the
+        debris of a crashed earlier stager of the same number; the Spark
+        stagers self-heal through mode("overwrite"), and this one must
+        too, or os.link raises FileExistsError. The pointer swap in
+        _commit is what makes a version real, so removing uncommitted
+        staging is always safe."""
+        vdir = self._vdir(name, version)
+        if os.path.isdir(vdir):
+            shutil.rmtree(vdir)
+        os.makedirs(vdir)
+        return self._link_all(src_dir, vdir)
 
     def overwrite(
         self,
@@ -857,7 +859,7 @@ class TableStore:
                 fh.write(",".join(partition_by))
         want_cdc = capture_cdc and self._feed_exists(name) and self.exists(name)
         pre = self.read(name).withColumn("_change_type", F.lit(CDC_DELETE)) if want_cdc else None
-        v = self._write_version(name, df, op="overwrite")
+        v, _ = self._write_version(name, df, "overwrite")
         if want_cdc:
             changes = pre.unionByName(
                 df.withColumn("_change_type", F.lit(CDC_INSERT)), allowMissingColumns=True
@@ -884,23 +886,40 @@ class TableStore:
         columns the increment omits are allowed and read back as null
         for its rows. Type changes on an existing column are always an
         error — evolution adds columns, it never rewrites history."""
+        v, _ = self._append(name, df, "append", merge_schema, never_retype=merge_schema)
+        if capture_cdc and self._feed_exists(name):
+            self._append_changes(name, df.withColumn("_change_type", F.lit(CDC_INSERT)), v)
+        return v
+
+    def _append(
+        self,
+        name: str,
+        df: DataFrame,
+        op: str,
+        merge_schema: bool,
+        never_retype: bool = False,
+    ) -> tuple[int, list[str]]:
+        """The append core of append() and of the change feed: align the
+        increment's columns to the stored schema (evolving the schema
+        with ``merge_schema``), stage it, link every previous file and
+        commit. Returns the version and its staged files."""
         if not self.exists(name):
-            return self._write_version(name, df, op="append")
+            return self._write_version(name, df, op)
         # align column order with the stored layout (metadata-only select);
         # fail loud first — a silent select() would drop misnamed/extra
         # increment columns without any error
-        prev_schema = _nullable(self.table_schema(name) or self.read(name).schema)
-        stored = [f.name for f in prev_schema.fields]
-        extra = set(df.columns) - set(stored)
-        missing = set(stored) - set(df.columns)
-        schema = _SCHEMA_INHERIT
+        prev_read = _nullable(self.table_schema(name) or self.read(name).schema)
+        stored = [f.name for f in prev_read.fields]
+        present = set(df.columns)
+        extra = [c for c in df.columns if c not in stored]
+        missing = [c for c in stored if c not in present]
         inc_by_name = {f.name: f for f in _nullable(df.schema).fields}
-        if merge_schema:
+        if never_retype:
             # evolution adds columns; it never retypes an existing one —
             # checked for EVERY shared column, not only when the shape
             # changed (a same-shape increment with a retyped column
             # would otherwise stage unreadable files)
-            for f in prev_schema.fields:
+            for f in prev_read.fields:
                 g = inc_by_name.get(f.name)
                 if g is not None and g.dataType != f.dataType:
                     raise ValueError(
@@ -909,6 +928,7 @@ class TableStore:
                         f"{g.dataType.simpleString()} (evolution adds "
                         "columns, it never retypes them)"
                     )
+        schema = _SCHEMA_INHERIT
         if extra or missing:
             if not merge_schema:
                 raise ValueError(
@@ -916,29 +936,14 @@ class TableStore:
                     f"(extra columns {sorted(extra)}, missing columns "
                     f"{sorted(missing)}); pass merge_schema=True to evolve"
                 )
-            new_fields = [inc_by_name[c] for c in df.columns if c in extra]
-            schema = StructType(list(prev_schema.fields) + new_fields)
-            df = df.select(
-                *[c for c in stored if c not in missing],
-                *[f.name for f in new_fields],
-            )
-        else:
-            df = df.select(*stored)
-        v, vdir, staged_schema = self._stage_version(name, df)
-        stats = self._staged_append_stats(name, vdir)  # before linking
-        self._link_prev_files(name, vdir)
-        self._commit(
-            name, v, "append", stats=stats, schema=schema,
-            read_schema=_same_read(staged_schema, prev_schema, schema),
-        )
-        if capture_cdc and self._feed_exists(name):
-            self._append_changes(name, df.withColumn("_change_type", F.lit(CDC_INSERT)), v)
-        return v
+            schema = StructType(prev_read.fields + [inc_by_name[c] for c in extra])
+        df = df.select(*[c for c in stored if c in present], *extra)
+        return self._write_version(name, df, op, schema=schema, prev_read=prev_read)
 
     def truncate(self, name: str, capture_cdc: bool = True) -> int:
         old = self.read(name)
         want_cdc = capture_cdc and self._feed_exists(name)
-        v = self._write_version(name, old.limit(0), op="truncate")
+        v, _ = self._write_version(name, old.limit(0), "truncate")
         if want_cdc:
             self._append_changes(name, old.withColumn("_change_type", F.lit(CDC_DELETE)), v)
         return v
@@ -971,7 +976,7 @@ class TableStore:
             raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
         if version == cur:
             return cur
-        src = os.path.join(self._dir(name), f"v{version}")
+        src = self._vdir(name, version)
         if not os.path.isdir(src):
             raise FileNotFoundError(
                 f"restore {name!r}: version {version} has no files on disk "
@@ -984,39 +989,12 @@ class TableStore:
             else None
         )
         v = cur + 1
-        vdir = os.path.join(self._dir(name), f"v{v}")
-        # A version directory past the committed pointer can only be the
-        # debris of a crashed earlier restore of this same number; the
-        # Spark write paths self-heal via mode("overwrite"), so the link
-        # stager must too — otherwise os.link raises FileExistsError
-        # (ADVICE r8). The pointer swap in _commit is what makes a
-        # version real, so removing uncommitted staging is always safe.
-        if os.path.isdir(vdir):
-            shutil.rmtree(vdir)
-        os.makedirs(vdir, exist_ok=True)
-        n_files, n_rows = 0, 0
-        for dirpath, _dirnames, filenames in os.walk(src):
-            rel = os.path.relpath(dirpath, src)
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                dst_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                fp = os.path.join(dirpath, fn)
-                os.link(fp, os.path.join(dst_dir, fn))
-                n_files += 1
-                n_rows += self._file_rows(fp)
-        # restored content is byte-identical to the target: carry its
-        # memoized stats, or the counts accumulated during the link walk
-        # just performed (never a second post-commit walk)
+        stats = self._link_version(name, v, src)
         # the restored version adopts the TARGET's schema state — the
         # logged schema of v_target if it had one, or none at all for a
         # pre-evolution target (a restore across an evolution boundary
         # rolls the schema back with the content, as Delta RESTORE does)
-        stats = self._vstats.get((name, version), (n_files, n_rows))
-        self._commit(
-            name, v, "restore", stats=stats, schema=self.table_schema(name, version)
-        )
+        self._commit(name, v, "restore", stats, self.table_schema(name, version))
         if want_cdc:
             changes = pre.unionByName(
                 self.time_travel(name, version).withColumn(
@@ -1045,25 +1023,9 @@ class TableStore:
             raise FileNotFoundError(f"table {src!r} does not exist in {self.root}")
         if self.exists(dst):
             raise FileExistsError(f"clone target {dst!r} already exists")
-        src_dir = os.path.join(self._dir(src), f"v{v_src}")
-        vdir = os.path.join(self._dir(dst), "v1")
-        # self-heal debris from a crashed earlier clone (no pointer was
-        # ever written for dst — the exists() check above proves it)
-        if os.path.isdir(vdir):
-            shutil.rmtree(vdir)
-        os.makedirs(vdir, exist_ok=True)
-        n_files, n_rows = 0, 0
-        for dirpath, _dirnames, filenames in os.walk(src_dir):
-            rel = os.path.relpath(dirpath, src_dir)
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                dst_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                fp = os.path.join(dirpath, fn)
-                os.link(fp, os.path.join(dst_dir, fn))
-                n_files += 1
-                n_rows += self._file_rows(fp)
+        # no pointer was ever written for dst (the exists() check above
+        # proves it), so _link_version may clear a crashed clone's debris
+        stats = self._link_version(dst, 1, self._vdir(src, v_src))
         spec = self.partition_spec(src)
         if spec:
             with open(self._spec_path(dst), "w") as fh:
@@ -1071,9 +1033,7 @@ class TableStore:
         cons = self.check_constraints(src)
         if cons:
             self._write_constraints(dst, cons)
-        stats = self._vstats.get((src, v_src), (n_files, n_rows))
-        self._vstats[(dst, 1)] = stats
-        self._commit(dst, 1, "clone", stats=stats, schema=self.table_schema(src, v_src))
+        self._commit(dst, 1, "clone", stats, self.table_schema(src, v_src))
         return 1
 
     def update(
@@ -1108,12 +1068,10 @@ class TableStore:
             )
         want_cdc = capture_cdc and self._feed_exists(name)
 
-        v, vdir, read_schema = self._stage_version(name, updated.drop("__upd"))
-        stats = self._staged_stats(vdir)
-        if pruned:
-            linked = self._link_untouched(name, vdir)
-            stats = (stats[0] + linked[0], stats[1] + linked[1])
-        self._commit(name, v, "update", stats=stats, read_schema=read_schema)
+        v, _ = self._write_version(
+            name, updated.drop("__upd"), "update",
+            link_untouched=pruned, schema=_SCHEMA_INHERIT,
+        )
         if want_cdc:
             # pre/post images of matching rows only (match evaluated on the
             # OLD values — the flag is computed before the SET is applied)
@@ -1149,15 +1107,20 @@ class TableStore:
             df = df.repartition(target_files, *spec)
         else:
             df = df.repartition(target_files)
-        return self._write_version(name, df, op="compact")
+        return self._write_version(name, df, "compact")[0]
 
     def drop(self, name: str) -> None:
-        shutil.rmtree(self._dir(name), ignore_errors=True)
+        """DROP TABLE: removes the table together with its change feed and
+        stream directory, as Delta's DROP TABLE drops the change feed —
+        a re-created table must not inherit the dropped one's changes."""
+        names = (name, self._cdc_table(name))
+        for path in (*map(self._dir, names), self.change_stream_dir(name)):
+            shutil.rmtree(path, ignore_errors=True)
         # a re-created table restarts at v1 — stale memo entries would
         # otherwise describe the dropped incarnation's versions
-        self._vstats = {k: s for k, s in self._vstats.items() if k[0] != name}
+        self._vstats = {k: s for k, s in self._vstats.items() if k[0] not in names}
         self._read_schemas = {
-            k: s for k, s in self._read_schemas.items() if k[0] != name
+            k: s for k, s in self._read_schemas.items() if k[0] not in names
         }
 
     # -- maintenance: retention / layout / data skipping -----------------------
@@ -1175,8 +1138,6 @@ class TableStore:
         stop being time-travelable, which is the documented trade. The
         CDC feed is NOT vacuumed — change history is an independent
         retention decision (Delta separates these too)."""
-        import glob as _glob
-
         cur = self.current_version(name)
         if cur is None:
             raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
@@ -1184,7 +1145,7 @@ class TableStore:
         removed = []
         freed_inos: set[int] = set()
         for v in range(1, cutoff + 1):
-            vdir = os.path.join(self._dir(name), f"v{v}")
+            vdir = self._vdir(name, v)
             if os.path.isdir(vdir):
                 # an inode is truly reclaimed only when this version held
                 # its LAST link (st_nlink == 1 at removal time); files a
@@ -1192,11 +1153,9 @@ class TableStore:
                 # entries — their content is byte-identical by
                 # construction. Two condemned versions sharing an inode
                 # resolve across iterations: the later rmtree sees
-                # nlink == 1. (ADVICE r7: the old blanket clear() forced
-                # a full footer re-read after every vacuum.)
-                for p in _glob.glob(
-                    os.path.join(vdir, "**", "*.parquet"), recursive=True
-                ):
+                # nlink == 1. A blanket clear() would instead force a full
+                # footer re-read on the next commit after every vacuum.
+                for p in self._files(vdir):
                     try:
                         st = os.stat(p)
                     except OSError:
@@ -1235,7 +1194,6 @@ class TableStore:
         from parquet FOOTERS via pyarrow — one metadata read per file,
         no data pages touched; at scale this piggybacks on OPTIMIZE,
         which just wrote those footers. Returns the manifest."""
-        import glob as _glob
         import json as _json
 
         import pyarrow as _pa
@@ -1244,10 +1202,8 @@ class TableStore:
         v = self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
-        vdir = os.path.join(self._dir(name), f"v{v}")
-        files = sorted(
-            _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
-        )
+        vdir = self._vdir(name, v)
+        files = sorted(self._files(vdir))
         manifest: dict = {"version": v, "columns": columns, "files": []}
         # hive partition columns live in directory names, not footers —
         # and they are the most natural skipping target on a partitioned
@@ -1335,7 +1291,7 @@ class TableStore:
                 manifest = _json.load(fh)
         except FileNotFoundError:
             return self.read(name).filter(between)
-        vdir = os.path.join(self._dir(name), f"v{v}")
+        vdir = self._vdir(name, v)
         keep = [
             os.path.join(vdir, e["path"])
             for e in manifest["files"]
@@ -1346,7 +1302,7 @@ class TableStore:
         # basePath keeps hive partition-directory columns in the schema
         # when only a subset of leaf files is read — without it a
         # partitioned table's partition columns would silently vanish.
-        # The FULL table's schema is pinned explicitly (r8 review): a
+        # The FULL table's schema is pinned explicitly: a
         # string partition column whose kept subset happens to be all
         # numeric-looking ('42' kept, 'a42' pruned) would otherwise be
         # re-inferred as int over the subset, flipping the residual
@@ -1418,7 +1374,7 @@ class TableStore:
             )
         df = self.read(name)
         v = (self.current_version(name) or 0) + 1
-        vdir = os.path.join(self._dir(name), f"v{v}")
+        vdir = self._vdir(name, v)
         keyed = frames[curve](df, zorder_by[0], zorder_by[1])
         laid_out = (
             keyed.repartitionByRange(target_files, *spec, "__zkey")
@@ -1430,7 +1386,8 @@ class TableStore:
             writer = writer.partitionBy(*spec)
         writer.parquet(vdir)
         self._commit(
-            name, v, "optimize", read_schema=None if spec else laid_out.schema
+            name, v, "optimize", self._count(self._files(vdir)),
+            read_schema=None if spec else laid_out.schema,
         )
         self.collect_file_stats(
             name, list(zorder_by) + [c for c in spec if c not in zorder_by]
@@ -1542,16 +1499,14 @@ class TableStore:
             result = joined.select(*out_cols, action.alias("__action"))
 
             try:
-                v, vdir, read_schema = self._stage_version(name, result.drop("__action"))
+                v, _ = self._write_version(
+                    name, result.drop("__action"), "merge",
+                    link_untouched=pruned, schema=_SCHEMA_INHERIT,
+                )
             except Exception as ex:
                 if _is_dup_key_error(ex):
                     raise ValueError(f"merge source has duplicate keys on {on}") from None
                 raise
-            stats = self._staged_stats(vdir)
-            if pruned:
-                linked = self._link_untouched(name, vdir)
-                stats = (stats[0] + linked[0], stats[1] + linked[1])
-            self._commit(name, v, "merge", stats=stats, read_schema=read_schema)
             # CDC after the main commit: a failure here can lose a feed
             # entry for a committed version, never record one for a
             # phantom version.
@@ -1578,62 +1533,28 @@ class TableStore:
             .withColumn("_change_type", F.lit(""))
             .withColumn("_commit_version", F.lit(0))
         )
-        self._write_version(self._cdc_table(name), empty, op="cdc-init")
+        self._write_version(self._cdc_table(name), empty, "cdc-init")
+
+    def change_stream_dir(self, name: str) -> str:
+        """The append-only directory every feed commit of ``name`` links
+        its change files into (read by streaming.cdc.stream_changes)."""
+        return os.path.join(self.root, "_cdc_stream", name)
 
     def _append_changes(self, name: str, changes: DataFrame, version: int) -> None:
-        """Append this commit's change rows to the feed table (O(increment))
-        and to the append-only stream dir for streaming consumers."""
-        changes = changes.withColumn("_commit_version", F.lit(version))
-        cdc = self._cdc_table(name)
-        if self.exists(cdc):
-            # the feed follows the source table's evolution: change rows
-            # carrying columns the feed has not seen evolve the feed's
-            # logged schema the same way merge_schema evolves the table
-            feed_schema = _nullable(self.table_schema(cdc) or self.read(cdc).schema)
-            feed_cols = [f.name for f in feed_schema.fields]
-            extra = [c for c in changes.columns if c not in feed_cols]
-            schema = _SCHEMA_INHERIT
-            if extra:
-                inc_by_name = {f.name: f for f in _nullable(changes.schema).fields}
-                schema = StructType(
-                    list(feed_schema.fields) + [inc_by_name[c] for c in extra]
-                )
-                changes = changes.select(
-                    *[c for c in feed_cols if c in changes.columns], *extra
-                )
-            elif self.table_schema(cdc) is not None:
-                # schema-logged feed: rows may omit evolved columns (the
-                # logged schema nulls them on read)
-                changes = changes.select(
-                    *[c for c in feed_cols if c in changes.columns]
-                )
-            elif any(c not in changes.columns for c in feed_cols):
-                # never-evolved feed receiving an OMITTING batch (a
-                # merge_schema append may legally drop existing columns):
-                # enter schema-logged mode so the logged schema nulls the
-                # omitted columns on read — selecting all feed_cols here
-                # would raise UNRESOLVED_COLUMN *after* the source table's
-                # version committed, permanently losing the change batch
-                # (ADVICE r9 #1)
-                schema = _nullable(feed_schema)
-                changes = changes.select(
-                    *[c for c in feed_cols if c in changes.columns]
-                )
-            else:
-                changes = changes.select(*feed_cols)
-            v, vdir, staged_schema = self._stage_version(cdc, changes)
-            stats = self._staged_append_stats(cdc, vdir)  # before linking
-            staged = self._staged_parquet_files(vdir)  # before linking
-            self._link_prev_files(cdc, vdir)
-            self._commit(
-                cdc, v, "cdc-append", stats=stats, schema=schema,
-                read_schema=_same_read(staged_schema, feed_schema, schema),
-            )
-        else:
-            v = self._write_version(cdc, changes, op="cdc-append")
-            staged = self._staged_parquet_files(
-                os.path.join(self._dir(cdc), f"v{v}")
-            )
+        """Append this commit's change rows to the feed table with
+        append's own core (O(increment)), then link the staged files into
+        the stream directory. The feed follows the table's evolution by
+        append(merge_schema=True)'s column rules: a batch may add columns
+        or omit some (a merge_schema append may drop columns), and it
+        must land either way — the table version has already committed,
+        so a refused batch would be lost for good. For the same reason
+        the retype check does not apply."""
+        _, staged = self._append(
+            self._cdc_table(name),
+            changes.withColumn("_commit_version", F.lit(version)),
+            "cdc-append",
+            merge_schema=True,
+        )
         # Append-only copy for streaming consumers (file source sees only
         # new files; see streaming/cdc.py). The staged feed files ARE this
         # commit's change rows, so hard-link them instead of re-running the
@@ -1643,7 +1564,7 @@ class TableStore:
         # local-POSIX-filesystem fast path; if the stream dir ever lands on
         # a different device (or a store without link support) fall back to
         # a plain copy — same bytes, one extra read+write per file.
-        stream_dir = os.path.join(self.root, "_cdc_stream", name)
+        stream_dir = self.change_stream_dir(name)
         os.makedirs(stream_dir, exist_ok=True)
         for path in staged:
             dst = os.path.join(stream_dir, os.path.basename(path))
@@ -1652,12 +1573,6 @@ class TableStore:
                     os.link(path, dst)
                 except OSError:
                     shutil.copy2(path, dst)
-
-    @staticmethod
-    def _staged_parquet_files(vdir: str) -> list[str]:
-        import glob as _glob
-
-        return _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
 
     def _log_cdc(
         self,

@@ -7,7 +7,7 @@ from .events import (
     streaming_session_counts,
     tumbling_counts,
 )
-from .cdc import append_only_cdc_dir, stream_changes
+from .cdc import stream_changes
 from .stateful import running_user_stats
 
 __all__ = [
@@ -18,7 +18,6 @@ __all__ = [
     "streaming_dedupe_within",
     "streaming_session_counts",
     "tumbling_counts",
-    "append_only_cdc_dir",
     "stream_changes",
     "running_user_stats",
 ]

@@ -2,23 +2,18 @@
 near-real-time CDC path the reference enables with sys.sp_cdc_enable_table
 (CDC.sql:1-2; rationale reference README.md:375-384).
 
-The TableStore writes every merge's change rows append-only into
-``<root>/_cdc_stream/<table>/`` (new files only, never rewritten), which
-is exactly the contract Spark's file streaming source needs: downstream
-consumers pick up each commit's changes as a micro-batch.
+The TableStore links every feed commit's change files append-only into
+``TableStore.change_stream_dir(table)`` (new files only, never
+rewritten), which is exactly the contract Spark's file streaming source
+needs: downstream consumers pick up each commit's changes as a
+micro-batch.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.table_store import TableStore
-
-
-def append_only_cdc_dir(store: TableStore, name: str) -> str:
-    return os.path.join(store.root, "_cdc_stream", name)
 
 
 def stream_changes(spark: SparkSession, store: TableStore, name: str) -> DataFrame:
@@ -30,5 +25,5 @@ def stream_changes(spark: SparkSession, store: TableStore, name: str) -> DataFra
     return (
         spark.readStream.schema(schema)
         .format("parquet")
-        .load(append_only_cdc_dir(store, name))
+        .load(store.change_stream_dir(name))
     )

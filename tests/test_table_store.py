@@ -769,11 +769,11 @@ def test_append_history_stats_match_cold_walk(spark, tmp_path):
 def test_append_history_stats_partitioned_with_cdc(spark, tmp_path):
     """The delta-carried commit stats must stay correct on the two
     harder append shapes: a hive-PARTITIONED table (staged files live in
-    partition subdirs; _link_prev_files merges per-file into dirs the
-    new write also touched) and a CDC-enabled table (each logical append
-    also stage+links the shadow table — the exact path ADVICE r7 flagged
-    as paying two O(table) walks). Every history row must equal a cold
-    store's full walk, on the table AND its change feed."""
+    partition subdirs; _link_all merges per-file into dirs the new write
+    also touched) and a CDC-enabled table (each logical append also
+    stage+links the feed table, which must not pay two O(table) walks).
+    Every history row must equal a cold store's full walk, on the table
+    AND its change feed."""
     from designing_data_warehouse_in_sql_server_spark.sources.table_store import (
         TableStore,
     )
@@ -1056,12 +1056,13 @@ def test_restore_self_heals_crashed_staging_debris(spark, store, tmp_path):
 
 
 def test_no_commit_ever_rewalks_the_finished_version(spark, tmp_path, monkeypatch):
-    """VERDICT r8: commit latency must not grow with table size via a
-    post-commit stats walk. Instrument _version_stats (the full-glob
-    fallback) and drive every write path — overwrite, append, pruned
-    merge, pruned update, restore, clone — on a partitioned CDC table:
-    the fallback must never fire, and every delta-carried history row
-    must still equal a cold store's full walk."""
+    """Commit latency must not grow with table size via a post-commit
+    stats walk. Instrument _version_stats (the full-glob walk) and drive
+    every write path — overwrite, append, evolving append, pruned merge,
+    pruned update, restore, clone, overwrite and truncate of a CDC
+    table, compact, optimize, and a feed's first write by merge — on
+    partitioned CDC tables: the walk must never fire, and every
+    write-side history row must still equal a cold store's full walk."""
     from designing_data_warehouse_in_sql_server_spark.sources.table_store import (
         TableStore,
     )
@@ -1094,15 +1095,58 @@ def test_no_commit_ever_rewalks_the_finished_version(spark, tmp_path, monkeypatc
     v_now = store.current_version("t")
     store.restore("t", v_now - 1)
     store.clone("t", "t2")
+    store.append(
+        "t",
+        spark.createDataFrame([(5, "b", 5.0, 1)], "id long, p string, v double, w int"),
+        merge_schema=True,
+    )
+    store.overwrite("t", df)
+    store.truncate("t")
+    store.append("t", df)
+    store.compact("t")
+    store.optimize("t", zorder_by=("id", "v"))
+    store.overwrite("u", df, partition_by=["p"])
+    store.merge("u", df.limit(1), on=["id"])  # the feed's first write
     assert calls == [], f"_version_stats walked at commit time: {calls}"
 
     cold = TableStore(spark, root)
-    for name in ("t", "t2", store._cdc_table("t")):
+    for name in ("t", "t2", "u", store._cdc_table("t"), store._cdc_table("u")):
         hist = {
             e["version"]: (e["num_files"], e["num_rows"]) for e in store.history(name)
         }
         for v, got in hist.items():
             assert got == real(cold, name, v), (name, v)
+
+
+def test_drop_removes_the_change_feed_and_its_stream(spark, store):
+    """DROP TABLE takes the table's change feed and stream directory with
+    it (as Delta's does): a re-created table must not report the dropped
+    table's changes, and its first merge starts a feed of its own."""
+    store.overwrite("t", _df(spark, [(1, "a"), (2, "b")]))
+    store.merge("t", _df(spark, [(2, "B"), (3, "c")]), on=["k"])
+    assert store.read_changes("t").count() == 3
+    store.drop("t")
+    stream = os.path.join(store.root, "_cdc_stream", "t")
+    assert not os.path.exists(os.path.join(store.root, "_cdc__t"))
+    assert not os.path.exists(stream)
+    assert not store._feed_exists("t")
+    memo = [*store._vstats, *store._read_schemas]
+    assert not [k for k in memo if k[0] in ("t", "_cdc__t")]
+
+    store.overwrite("t", _df(spark, [(5, "e")]))
+    store.append("t", _df(spark, [(6, "f")]))
+    with pytest.raises(FileNotFoundError, match="no change feed"):
+        store.read_changes("t")
+    store.merge("t", _df(spark, [(6, "F")]), on=["k"])
+    got = sorted(
+        (r.k, r.v, r._change_type, r._commit_version)
+        for r in store.read_changes("t").collect()
+    )
+    assert got == [(6, "F", "update_postimage", 3), (6, "f", "update_preimage", 3)]
+    feed_v1 = os.path.join(store.root, "_cdc__t", "v1")
+    assert sorted(os.listdir(stream)) == sorted(
+        f for f in os.listdir(feed_v1) if f.endswith(".parquet")
+    )
 
 
 # ---------------------------------------------------------------------------
