@@ -33,6 +33,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from . import ids
+
 
 def dedupe(
     df: DataFrame,
@@ -86,6 +88,28 @@ def _join_form_stats(
     return out.drop(*[n for n in names if n.startswith(prefix)])
 
 
+def _with_group_stats(
+    df: DataFrame,
+    group_keys: Sequence[Column | str],
+    aggs: dict[str, Column],
+    rows_per_group_hint: int | None,
+) -> DataFrame:
+    """``df``'s columns, in order, then one column per ``aggs`` entry
+    (alias -> aggregate): the aggregate over the row's ``group_keys``
+    group.
+
+    ``rows_per_group_hint``: optional upper bound on the largest group.
+    No hint, or one at most ``WINDOW_FORM_MAX_ROWS``, keeps the
+    unordered per-group window: one window pass beats an aggregate +
+    join on the operators' typical day-sized staging increment. Above
+    it the stats come from :func:`_join_form_stats`, so no group ever
+    buffers through one task."""
+    if rows_per_group_hint is None or 0 <= rows_per_group_hint <= ids.WINDOW_FORM_MAX_ROWS:
+        w = W.partitionBy(*group_keys)
+        return df.select("*", *[c.over(w).alias(alias) for alias, c in aggs.items()])
+    return _join_form_stats(df, group_keys, aggs)
+
+
 def impute_group_mean(
     df: DataFrame,
     group_keys: Sequence[Column | str],
@@ -99,38 +123,20 @@ def impute_group_mean(
     ``update_filter`` excludes from being updated) — the reference's
     filter asymmetry, preserved for parity.
 
-    ``rows_per_group_hint``: optional upper bound on the largest group.
-    Above ``WINDOW_FORM_MAX_ROWS`` the stats come from a hash aggregate
-    + broadcast join (see _join_form_stats) instead of a per-group
-    window, so no group ever buffers through one task. Default (no
-    hint) keeps the window form: the operator's typical input is a
-    day-sized staging increment (plans/pipeline.py), where one window
-    pass beats an aggregate + join; fact-table callers pass the free
+    ``rows_per_group_hint``: optional upper bound on the largest group,
+    which picks the window or the stats-join form (see
+    :func:`_with_group_stats`); fact-table callers pass the free
     parquet-footer count."""
-    from .ids import _window_form_ok
-
-    if not _window_form_ok(rows_per_group_hint) and rows_per_group_hint is not None:
-        out = _join_form_stats(
-            df, group_keys, {f"__mean_{c}": F.avg(c) for c in cols}
-        )
-        for c in cols:
-            should_fill = F.col(c).isNull()
-            if update_filter is not None:
-                should_fill = should_fill & update_filter
-            out = out.withColumn(
-                c, F.when(should_fill, F.col(f"__mean_{c}")).otherwise(F.col(c))
-            )
-        # the join reorders columns; restore the input schema order
-        return out.select(*df.columns)
-    w = W.partitionBy(*group_keys)
-    out = df
+    aggs = {f"__mean_{c}": F.avg(c) for c in cols}
+    out = _with_group_stats(df, group_keys, aggs, rows_per_group_hint)
     for c in cols:
-        mean = F.avg(c).over(w)
         should_fill = F.col(c).isNull()
         if update_filter is not None:
             should_fill = should_fill & update_filter
-        out = out.withColumn(c, F.when(should_fill, mean).otherwise(F.col(c)))
-    return out
+        out = out.withColumn(
+            c, F.when(should_fill, F.col(f"__mean_{c}")).otherwise(F.col(c))
+        )
+    return out.drop(*aggs)
 
 
 def cap_outliers_zscore(
@@ -146,38 +152,22 @@ def cap_outliers_zscore(
     ``update_filter`` are modified (reference asymmetry, as above).
 
     ``rows_per_group_hint``: same size-adaptive dispatch as
-    :func:`impute_group_mean` — above the threshold the (mean, stddev)
-    pairs ride a hash aggregate + broadcast join, never a one-task-per-
-    group window buffer."""
-    from .ids import _window_form_ok
-
-    if not _window_form_ok(rows_per_group_hint) and rows_per_group_hint is not None:
-        aggs: dict[str, Column] = {}
-        for c in cols:
-            aggs[f"__mean_{c}"] = F.avg(c)
-            aggs[f"__std_{c}"] = F.stddev(c)
-        out = _join_form_stats(df, group_keys, aggs)
-        for c in cols:
-            exceeds = (
-                F.abs(F.col(c) - F.col(f"__mean_{c}")) / F.col(f"__std_{c}")
-            ) > z
-            if update_filter is not None:
-                exceeds = exceeds & update_filter
-            out = out.withColumn(
-                c, F.when(exceeds, F.col(f"__mean_{c}")).otherwise(F.col(c))
-            )
-        # the join reorders columns; restore the input schema order
-        return out.select(*df.columns)
-    w = W.partitionBy(*group_keys)
-    out = df
+    :func:`impute_group_mean`."""
+    aggs: dict[str, Column] = {}
     for c in cols:
-        mean = F.avg(c).over(w)
-        std = F.stddev(c).over(w)  # sample stddev = T-SQL STDEV
-        exceeds = (F.abs(F.col(c) - mean) / std) > z
+        aggs[f"__mean_{c}"] = F.avg(c)
+        aggs[f"__std_{c}"] = F.stddev(c)  # sample stddev = T-SQL STDEV
+    out = _with_group_stats(df, group_keys, aggs, rows_per_group_hint)
+    for c in cols:
+        exceeds = (
+            F.abs(F.col(c) - F.col(f"__mean_{c}")) / F.col(f"__std_{c}")
+        ) > z
         if update_filter is not None:
             exceeds = exceeds & update_filter
-        out = out.withColumn(c, F.when(exceeds, mean).otherwise(F.col(c)))
-    return out
+        out = out.withColumn(
+            c, F.when(exceeds, F.col(f"__mean_{c}")).otherwise(F.col(c))
+        )
+    return out.drop(*aggs)
 
 
 def mad_outlier_stats(

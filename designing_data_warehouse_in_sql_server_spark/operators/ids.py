@@ -1,33 +1,51 @@
-"""Distributed sequential surrogate-key assignment (F7 parity).
+"""Global running aggregates without a single-partition window (F7 parity).
 
 The reference gets surrogate keys from an IDENTITY column
 (reference README.md:96); a naive Spark translation is
 ``row_number() OVER (ORDER BY ...)`` — a window with an empty
 partition spec, which Catalyst plans as Exchange SinglePartition:
 the whole increment serializes through one task. At 100 TB that
-single task IS the job.
+single task IS the job. The same holds for every global running
+aggregate: ``SUM() OVER (ORDER BY ...)``, a running ``MAX`` and
+``NTILE``, and for ``PARTITION BY g`` windows over a few huge groups.
 
-``assign_sequential_ids`` is the two-phase (zipWithIndex-style) form:
+Each operator here has two forms, chosen by a size hint. With an
+``n_hint`` (an UPPER BOUND on the rows one window sort would see,
+e.g. a parquet footer count) at most ``WINDOW_FORM_MAX_ROWS``, the
+plain window runs. With no hint, or a larger one, the scale form runs,
+and every scale form is one kernel, ``_scan``: a running ``sum`` or
+``max`` of a value per group in sort order.
 
-  phase 1: repartition by the sort key, per-PARTITION row_number
-           (parallel windows, one shuffle)
-  phase 2: count rows per partition (a metadata-sized aggregate),
-           prefix-sum the counts on the driver (#partitions values,
-           not rows), broadcast-join the offsets back
+  phase 1: range-partition by (group, sort key), tag each row with its
+           partition id ``__pid``, and run the aggregate per
+           (``__pid``, group) over a ROWS frame ending at the current
+           row or the row before it (parallel windows, one shuffle);
+  phase 2: collect the per-(``__pid``, group) totals, O(#partitions +
+           #groups) rows, fold them into exclusive per-group prefixes
+           on the driver, and broadcast-join them back as ``__offset``.
 
-Ids are dense 1..N starting at ``start + 1``. Repartitioning by
-range on the sort key makes the assignment deterministic for a given
-(data, partition count): ids are globally ordered by ``order_by``,
-matching what the single-partition window would have produced.
+Sequential ids and NTILE ranks are the running sum of 1; NTILE's row
+count is the group total from the same collect. Range partitioning makes
+the result deterministic for a given (data, partition count) and equal,
+bit for bit, to the window form (property-tested).
+
+The kernel pins its ranked relation with a lazy ``localCheckpoint``,
+reused by the totals job and the final join. It is the only site in this
+module whose ``__pid`` regroup follows a checkpoint: a checkpoint forgets
+its input's partitioning, so the totals aggregate shuffles by ``__pid``
+again, and that regroup cannot move before the checkpoint because
+``__pid`` only exists after the range exchange.
 """
 
 from __future__ import annotations
 
-import os
+import itertools
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # Size-adaptive form selection: below this many input rows the
 # single-window plan (one Exchange SinglePartition, but only over a
@@ -43,19 +61,110 @@ from pyspark.sql import functions as F
 # #groups) — see its docstring). 4M rows x ~50 B is ~200 MB through one task:
 # comfortably within one executor's sort budget, far below the point
 # where the single task becomes the job.
-WINDOW_FORM_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_WINDOW_FORM_MAX_ROWS", 4_000_000)
-)
+WINDOW_FORM_MAX_ROWS = 4_000_000
 
-# grouped_prefix_sum's two-phase path folds an O(#partitions + #groups)
-# offset relation on the driver; past this many rows the group
-# cardinality no longer matches the few-huge-groups shape the path is
-# for, and the call fails fast instead of risking a driver OOM.
+# The two-phase form folds an O(#partitions + #groups) offset relation
+# on the driver; past this many rows the group cardinality no longer
+# matches the few-huge-groups shape the form is for, and the call fails
+# fast instead of risking a driver OOM.
 _MAX_OFFSET_ROWS = 1_000_000
 
 
 def _window_form_ok(n_hint: int | None) -> bool:
     return n_hint is not None and 0 <= n_hint <= WINDOW_FORM_MAX_ROWS
+
+
+def _scan(
+    df: DataFrame,
+    value: Column,
+    group_cols: Sequence[str],
+    order_cols: Sequence[str | Column],
+    out_col: str,
+    total_col: str | None = None,
+    op: str = "sum",
+    exclusive: bool = False,
+) -> DataFrame:
+    """Two-phase running ``op`` ("sum" or "max") of ``value`` within each
+    ``group_cols`` group in ``order_cols`` order, over the ROWS frame
+    from the group's first row to the current row (``exclusive``: to
+    the row before it), as ``out_col`` (long). ``total_col`` gets the
+    group's ``op`` over all its rows. NULLs are skipped as SQL frame
+    aggregates skip them: ``out_col`` stays NULL until a non-null value
+    enters the frame. Raises ``ValueError`` past ``_MAX_OFFSET_ROWS``
+    (partition, group) pairs."""
+    agg = F.sum if op == "sum" else F.max
+    step = operator.add if op == "sum" else max
+    gcols = list(group_cols)
+    ranged = df.repartitionByRange(*gcols, *order_cols).withColumn(
+        "__pid", F.spark_partition_id()
+    )
+    w = (
+        Window.partitionBy("__pid", *gcols)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else Window.currentRow)
+    )
+    # materialized once by the totals job below, reused by the final join
+    # (on a cluster, swap for a reliable checkpoint / cached staging table)
+    ranged = ranged.withColumn("__local", agg(value).over(w)).localCheckpoint(eager=False)
+    totals = ranged.groupBy("__pid", *gcols).agg(agg(value).alias("__t"))
+    rows = totals.limit(_MAX_OFFSET_ROWS + 1).collect()
+    if len(rows) > _MAX_OFFSET_ROWS:
+        raise ValueError(
+            f"offset relation exceeds {_MAX_OFFSET_ROWS} rows — group "
+            "cardinality is too high for the two-phase form's driver-side "
+            "offset fold; pass a size hint <= WINDOW_FORM_MAX_ROWS to select "
+            "the window form, which is scale-safe for many small groups"
+        )
+
+    def gkey(r):
+        # None-safe per-column sort key (nulls first, like the range sort)
+        return tuple((r[c] is not None, r[c]) for c in gcols)
+
+    # SQL frame semantics ride the fold: the accumulator stays None until
+    # the group's first NON-NULL partial, so a partition whose preceding
+    # partitions are all-NULL inherits a NULL offset (and an all-NULL
+    # group a NULL total) — bit-identical to the window form
+    rows.sort(key=lambda r: (gkey(r), r["__pid"]))
+    data = []  # (pid, *gvals, exclusive-prefix offset, group total)
+    for _, group in itertools.groupby(rows, gkey):
+        prefixes, acc = [], None
+        for r in group:
+            prefixes.append((*r[:-1], acc))
+            if r["__t"] is not None:
+                acc = r["__t"] if acc is None else step(acc, r["__t"])
+        data += [(*p, acc) for p in prefixes]
+    # (__pid, *group_cols) keep their names and types from the totals
+    schema = StructType(
+        totals.schema.fields[:-1]
+        + [StructField("__offset", LongType()), StructField("__gtot", LongType())]
+    )
+    off_df = ranged.sparkSession.createDataFrame(data, schema)
+    on = [ranged["__pid"] == off_df["__pid"]]
+    on += [ranged[c].eqNullSafe(off_df[c]) for c in gcols]
+    local, off = F.col("__local"), F.col("__offset")
+    both = local + off if op == "sum" else F.greatest(local, off)
+    out = (
+        ranged.join(F.broadcast(off_df), on, "left")
+        .drop(off_df["__pid"], *[off_df[c] for c in gcols])
+        .withColumn(out_col, F.coalesce(both, local, off).cast("long"))
+    )
+    if total_col is not None:
+        out = out.withColumn(total_col, F.col("__gtot"))
+    return out.drop("__pid", "__local", "__offset", "__gtot")
+
+
+def _ntile_bucket(rank: Column, n: Column, k: int) -> Column:
+    """SQL NTILE(k)'s bucket of 1-based ``rank`` among ``n`` rows: the
+    first n % k buckets get one extra row."""
+    q = F.floor(n / k)
+    rem = n % k
+    big = q + 1
+    cut = rem * big  # ranks 1..cut live in the first `rem` (bigger) buckets
+    return (
+        F.when(rank <= cut, F.floor((rank - 1) / big) + 1)
+        .otherwise(rem + F.floor((rank - cut - 1) / F.greatest(q, F.lit(1))) + 1)
+        .cast("int")
+    )
 
 
 def assign_sequential_ids(
@@ -68,9 +177,10 @@ def assign_sequential_ids(
     """Add ``id_col`` = start+1, start+2, ... dense and globally ordered
     by ``order_by``, without ever collapsing to one partition.
 
-    Scale: one range-exchange of the data plus one partition-count
-    aggregate whose result (#partitions rows) is collected and
-    broadcast back. No task sees more than its own partition.
+    Scale: the running count of rows through ``_scan`` — one
+    range-exchange of the data plus one partition-count aggregate whose
+    result (#partitions rows) is collected and broadcast back. No task
+    sees more than its own partition.
 
     ``n_hint``: optional UPPER BOUND on ``df``'s row count; when at most
     ``WINDOW_FORM_MAX_ROWS`` the single-window form runs instead (same
@@ -85,31 +195,8 @@ def assign_sequential_ids(
                 "long"
             ),
         )
-    ranged = df.repartitionByRange(*order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    local = F.row_number().over(
-        Window.partitionBy("__pid").orderBy(*order_cols)
-    )
-    # materialized once by the counts job below, reused by the final join
-    # (on a cluster, swap for a reliable checkpoint / cached staging table)
-    ranged = ranged.withColumn("__local_rn", local).localCheckpoint(eager=False)
-
-    counts = sorted(
-        ranged.groupBy("__pid").count().collect(), key=lambda r: r["__pid"]
-    )
-    offsets, acc = {}, int(start)
-    for r in counts:
-        offsets[r["__pid"]] = acc
-        acc += r["count"]
-    offsets_df = ranged.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()] or [(0, int(start))],
-        "__pid int, __offset long",
-    )
-    return (
-        ranged.join(F.broadcast(offsets_df), "__pid", "left")
-        .withColumn(id_col, (F.col("__local_rn") + F.coalesce("__offset", F.lit(int(start)))).cast("long"))
-        .drop("__pid", "__local_rn", "__offset")
+    return _scan(df, F.lit(1), [], order_cols, id_col).withColumn(
+        id_col, F.col(id_col) + F.lit(int(start))
     )
 
 
@@ -143,10 +230,8 @@ def prefix_sum(
     form (see :func:`assign_sequential_ids`).
 
     Implementation: the degenerate ``group_cols=[]`` case of
-    :func:`grouped_prefix_sum` — ONE copy of the subtle range-partition
-    / offset-fold / NULL-frame logic (r7 review dedup; the fold's
-    SQL-NULL semantics apply here too: the running sum stays NULL until
-    the first non-null value, matching the window form exactly)."""
+    :func:`grouped_prefix_sum`. The running sum stays NULL until the
+    first non-null value, matching the window form exactly."""
     return grouped_prefix_sum(
         df,
         value_col,
@@ -219,89 +304,7 @@ def grouped_prefix_sum(
                 .cast("long"),
             )
         return out
-    ranged = df.repartitionByRange(*gcols, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w = (
-        Window.partitionBy("__pid", *gcols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranged = ranged.withColumn("__local_cum", F.sum(value_col).over(w)).localCheckpoint(
-        eager=False
-    )
-    totals_sdf = ranged.groupBy("__pid", *gcols).agg(F.sum(value_col).alias("__t"))
-    rows = totals_sdf.limit(_MAX_OFFSET_ROWS + 1).collect()
-    if len(rows) > _MAX_OFFSET_ROWS:
-        raise ValueError(
-            "grouped_prefix_sum: offset relation exceeds "
-            f"{_MAX_OFFSET_ROWS} rows — group cardinality is too high for "
-            "the two-phase form's driver-side offset fold; pass "
-            "rows_per_group_hint <= WINDOW_FORM_MAX_ROWS to select the "
-            "per-group window form, which is scale-safe for many small groups"
-        )
-
-    def gkey(r):
-        # None-safe per-column sort key (nulls first, like the range sort)
-        return tuple((r[c] is not None, r[c]) for c in gcols)
-
-    rows.sort(key=lambda r: (gkey(r), r["__pid"]))
-    # SQL SUM-over-frame semantics ride the fold: the accumulator stays
-    # None until the group's first NON-NULL partial, so a partition
-    # whose local prefix is all-NULL inherits a NULL offset (and an
-    # all-NULL group a NULL grand total) — bit-identical to the window
-    # form, which returns NULL until a non-null value enters the frame
-    offsets: list[tuple] = []  # (pid, *gvals, exclusive-prefix offset | None)
-    gtot: dict[tuple, int | None] = {}
-    cur_key: object = object()
-    acc: int | None = None
-    for r in rows:
-        k = gkey(r)
-        if k != cur_key:
-            cur_key, acc = k, None
-        offsets.append((r["__pid"], *(r[c] for c in gcols), acc))
-        if r["__t"] is not None:
-            acc = (acc or 0) + r["__t"]
-        gtot[k] = acc
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    gfields = [
-        StructField(f"__g_{f.name}", f.dataType, True)
-        for f in totals_sdf.schema.fields
-        if f.name in gcols
-    ]
-    schema = StructType(
-        [StructField("__opid", IntegerType(), True)]
-        + gfields
-        + [StructField("__offset", LongType(), True), StructField("__gtot", LongType(), True)]
-    )
-    def _opt(v):
-        return None if v is None else int(v)
-
-    data = [
-        (pid, *gvals, _opt(off), _opt(gtot[tuple((v is not None, v) for v in gvals)]))
-        for pid, *gvals, off in offsets
-    ]
-    off_df = ranged.sparkSession.createDataFrame(data, schema)
-    cond = F.col("__pid") == F.col("__opid")
-    for c in gcols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-    out = (
-        ranged.join(F.broadcast(off_df), cond, "left")
-        .withColumn(
-            cum_col,
-            # NULL local prefix: the running sum so far IS the offset
-            # (NULL when no prior non-null anywhere in the group)
-            F.when(F.col("__local_cum").isNull(), F.col("__offset"))
-            .otherwise(F.col("__local_cum") + F.coalesce("__offset", F.lit(0)))
-            .cast("long"),
-        )
-    )
-    if total_col is not None:
-        out = out.withColumn(total_col, F.col("__gtot").cast("long"))
-    return out.drop(
-        "__pid", "__local_cum", "__offset", "__gtot", "__opid", *[f"__g_{c}" for c in gcols]
-    )
+    return _scan(df, F.col(value_col), gcols, order_cols, cum_col, total_col)
 
 
 def prefix_max_exclusive(
@@ -323,7 +326,8 @@ def prefix_max_exclusive(
     (#partitions rows) folded on the driver into exclusive
     cross-partition prefixes and broadcast back. MAX is a monoid, so
     ``greatest(local_prev, preceding_partitions_max)`` (null-skipping,
-    like the window's frame-empty semantics) is exact.
+    like the window's frame-empty semantics) is exact. The value rides
+    as long, so the offsets and the local prefix share one type.
 
     ``n_hint``: optional row-count upper bound; at most
     ``WINDOW_FORM_MAX_ROWS`` selects the bit-identical single-window
@@ -335,36 +339,8 @@ def prefix_max_exclusive(
         return df.withColumn(
             out_col, F.max(F.col(value_col).cast("long")).over(w)
         )
-    ranged = df.repartitionByRange(*order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # value rides as long (integral contract, like exact_ntile_multi) so
-    # the broadcast offsets and the local prefix share one type
-    ranged = ranged.withColumn(
-        "__local_prev", F.max(F.col(value_col).cast("long")).over(w)
-    ).localCheckpoint(eager=False)
-    totals = sorted(
-        ranged.groupBy("__pid").agg(F.max(F.col(value_col).cast("long")).alias("__t")).collect(),
-        key=lambda r: r["__pid"],
-    )
-    rows, run = [], None
-    for r in totals:
-        rows.append((r["__pid"], run))
-        t = r["__t"]
-        if t is not None and (run is None or t > run):
-            run = t
-    offsets_df = ranged.sparkSession.createDataFrame(
-        rows or [(0, None)], "__pid int, __offset long"
-    )
-    return (
-        ranged.join(F.broadcast(offsets_df), "__pid", "left")
-        .withColumn(out_col, F.greatest("__local_prev", "__offset"))
-        .drop("__pid", "__local_prev", "__offset")
+    return _scan(
+        df, F.col(value_col).cast("long"), [], order_cols, out_col, op="max", exclusive=True
     )
 
 
@@ -373,14 +349,13 @@ def exact_ntile(
     k: int,
     order_by: Sequence[str | Column],
     out_col: str,
-    n: int | None = None,
     n_hint: int | None = None,
 ) -> DataFrame:
-    """Two-phase NTILE(k): global dense rank via ``assign_sequential_ids``
-    (never a single-partition window), then SQL NTILE's exact bucket law —
-    the first n % k buckets get one extra row. Bit-identical to
-    ``NTILE(k) OVER (ORDER BY ...)`` for deterministic (tie-broken)
-    orderings.
+    """Two-phase NTILE(k): global dense rank and row count n from one
+    ``_scan`` (never a single-partition window, and no separate count
+    job), then SQL NTILE's exact bucket law — the first n % k buckets
+    get one extra row. Bit-identical to ``NTILE(k) OVER (ORDER BY ...)``
+    for deterministic (tie-broken) orderings.
 
     ``n_hint``: optional row-count upper bound; at most
     ``WINDOW_FORM_MAX_ROWS`` selects the plain NTILE window form."""
@@ -388,20 +363,10 @@ def exact_ntile(
         return df.withColumn(
             out_col, F.ntile(k).over(Window.orderBy(*list(order_by)))
         )
-    if n is None:
-        n = df.count()
-    ranked = assign_sequential_ids(df, "__rank", order_by)
-    q, rem = divmod(n, k)
-    big = q + 1
-    cut = rem * big  # ranks 1..cut live in the first `rem` (bigger) buckets
-    bucket = (
-        F.when(F.col("__rank") <= cut, ((F.col("__rank") - 1) / big).cast("long") + 1)
-        .otherwise(
-            F.lit(rem) + ((F.col("__rank") - cut - 1) / F.greatest(F.lit(q), F.lit(1))).cast("long") + 1
-        )
-        .cast("int")
-    )
-    return ranked.withColumn(out_col, bucket).drop("__rank")
+    ranked = _scan(df, F.lit(1), [], list(order_by), "__rank", total_col="__n")
+    return ranked.withColumn(
+        out_col, _ntile_bucket(F.col("__rank"), F.col("__n"), k)
+    ).drop("__rank", "__n")
 
 
 def exact_ntile_multi(
@@ -414,24 +379,23 @@ def exact_ntile_multi(
     """NTILE(k) under SEVERAL global orderings in ONE offsets job.
 
     Running ``exact_ntile`` once per ordering costs one range-sample job
-    plus one count-collect job *per ordering* — for RFM's three scores
+    plus one offsets-collect job *per ordering* — for RFM's three scores
     that is ~6 sequential driver barriers whose fixed latency dominates
     small scale factors (round-3 bench: 5.7x baseline). This form batches
     all orderings:
 
       1. explode each row into one row per ordering, carrying a single
          numeric ascending sort value ``__sv`` (callers negate for DESC);
-      2. ONE ``repartitionByRange(__ord, __sv, tiebreak)`` — orderings are
-         range-major, so every partition serves exactly one ordering's
-         contiguous key range (a partition that straddles two orderings
-         still ranks correctly because the local window re-partitions by
-         ``__ord``);
-      3. ONE counts job grouped by (ordering, partition), ONE collect of
-         #orderings x #partitions rows; per-ordering totals give n, so no
-         separate ``df.count()`` barrier either;
-      4. broadcast offsets back, apply SQL NTILE's exact bucket law per
-         ordering, and fold the tall relation back to one row per input
-         row with a hash aggregate on the original columns.
+      2. ONE ``_scan`` grouped by the ordering ``__ord``: its range
+         partition on (``__ord``, ``__sv``, tiebreak) is range-major, so
+         every partition serves one ordering's contiguous key range (a
+         partition that straddles two orderings still ranks correctly
+         because the local window partitions by ``__ord`` too), and its
+         one collect of #orderings x #partitions rows also gives each
+         ordering's n;
+      3. apply SQL NTILE's exact bucket law per ordering, and fold the
+         tall relation back to one row per input row with a hash
+         aggregate on the original columns.
 
     ``specs`` is a list of ``(out_col, sort_value_column)`` where the sort
     value must be an INTEGRAL expression (cast to long — scale fractional
@@ -443,9 +407,7 @@ def exact_ntile_multi(
 
     Scale: the tall relation is |df| x #orderings rows — one range
     exchange, one metadata-sized collect, one hash aggregate. No
-    Exchange SinglePartition at any row count. The post-shuffle ranked
-    relation is local-checkpointed (reused by the counts job and the
-    final join).
+    Exchange SinglePartition at any row count.
 
     Duplicate input rows are preserved: each row gets a private
     ``__rid`` (monotonically_increasing_id, pinned by an EAGER local
@@ -492,42 +454,12 @@ def exact_ntile_multi(
         F.col("__o.__ord").alias("__ord"),
         F.col("__o.__sv").alias("__sv"),
     )
-    ranged = tall.repartitionByRange("__ord", "__sv", *tiebreak).withColumn(
-        "__pid", F.spark_partition_id()
+    ranked = _scan(
+        tall, F.lit(1), ["__ord"], ["__sv", *tiebreak], "__rank", total_col="__n"
     )
-    local = F.row_number().over(
-        Window.partitionBy("__pid", "__ord").orderBy("__sv", *tiebreak)
+    tagged = ranked.withColumn(
+        "__bucket", _ntile_bucket(F.col("__rank"), F.col("__n"), k)
     )
-    ranged = ranged.withColumn("__local_rn", local).localCheckpoint(eager=False)
-
-    counts = ranged.groupBy("__ord", "__pid").count().collect()
-    by_ord: dict[int, list] = {}
-    for r in counts:
-        by_ord.setdefault(r["__ord"], []).append(r)
-    rows = []
-    for o, rs in by_ord.items():
-        acc = 0
-        n_ord = sum(r["count"] for r in rs)
-        for r in sorted(rs, key=lambda r: r["__pid"]):
-            rows.append((o, r["__pid"], acc, n_ord))
-            acc += r["count"]
-    offsets_df = ranged.sparkSession.createDataFrame(
-        rows or [(0, 0, 0, 0)], "__ord int, __pid int, __offset long, __n long"
-    )
-    joined = ranged.join(F.broadcast(offsets_df), ["__ord", "__pid"], "left")
-    rank = F.col("__local_rn") + F.coalesce("__offset", F.lit(0))
-    # SQL NTILE bucket law from (rank, n, k): first n % k buckets get one
-    # extra row — all column arithmetic so per-ordering n rides the join.
-    q = F.floor(F.col("__n") / k)
-    rem = F.col("__n") % k
-    big = q + 1
-    cut = rem * big
-    bucket = (
-        F.when(rank <= cut, F.floor((rank - 1) / big) + 1)
-        .otherwise(rem + F.floor((rank - cut - 1) / F.greatest(q, F.lit(1))) + 1)
-        .cast("int")
-    )
-    tagged = joined.withColumn("__bucket", bucket)
     aggs = [
         F.max(F.when(F.col("__ord") == i, F.col("__bucket"))).alias(out)
         for i, (out, _sv) in enumerate(specs)

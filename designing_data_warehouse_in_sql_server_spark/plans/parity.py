@@ -219,36 +219,18 @@ FROM stats
 def _zscore_cap_plan(
     spark: SparkSession, sf_dir: str, rows_per_group_hint: int | None
 ) -> DataFrame:
-    from ..operators.ids import _window_form_ok
+    from ..operators.cleaning import _with_group_stats
 
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    if rows_per_group_hint is not None and not _window_form_ok(rows_per_group_hint):
-        # few-huge-groups form (proactive sweep of the VERDICT r6
-        # single-task ceiling): the shared stats-join dispatch —
-        # map-side-combinable hash aggregate broadcast back, the fact
-        # never sits in a per-group window buffer (one implementation,
-        # operators/cleaning._join_form_stats, r7 review dedup)
-        from ..operators.cleaning import _join_form_stats
-
-        stats = _join_form_stats(
-            lineitem.select(
-                "l_orderkey", "l_linenumber", "l_extendedprice", "l_returnflag"
-            ),
-            ["l_returnflag"],
-            {
-                "grp_mean": F.avg("l_extendedprice"),
-                "grp_std": F.stddev("l_extendedprice"),
-            },
-        )
-    else:
-        w = W.partitionBy("l_returnflag")
-        stats = lineitem.select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_extendedprice",
-            F.avg("l_extendedprice").over(w).alias("grp_mean"),
-            F.stddev("l_extendedprice").over(w).alias("grp_std"),
-        )
+    # above the threshold the stats ride a hash aggregate + broadcast
+    # join, so the fact never sits in a per-group window buffer
+    stats = _with_group_stats(
+        load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_linenumber", "l_extendedprice", "l_returnflag"
+        ),
+        ["l_returnflag"],
+        {"grp_mean": F.avg("l_extendedprice"), "grp_std": F.stddev("l_extendedprice")},
+        rows_per_group_hint,
+    )
     z_exceeds = (F.abs(F.col("l_extendedprice") - F.col("grp_mean")) / F.col("grp_std")) > 3
     return stats.select(
         "l_orderkey",

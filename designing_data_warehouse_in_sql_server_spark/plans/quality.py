@@ -5334,14 +5334,12 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import table_row_count
 
     scored = hash_classifier_score(spark, sf_dir)
-    n = table_row_count(sf_dir, "documents")
     phased = exact_ntile(
         scored,
         CURRICULUM_K,
         [F.col("logit_centi").desc(), F.col("doc_id")],
         "phase",
-        n=n,
-        n_hint=n,
+        n_hint=table_row_count(sf_dir, "documents"),
     )
     return (
         phased.groupBy("phase")

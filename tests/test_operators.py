@@ -109,6 +109,47 @@ def test_assign_sequential_ids_dense_and_parallel(spark):
     assert "SinglePartition" not in plan
 
 
+def test_two_phase_ntile_runs_no_count_job(spark):
+    """The two-phase exact_ntile takes its row count from the offsets
+    collect it already runs, so it submits exactly the Spark jobs of
+    assign_sequential_ids over the same input: no separate count job."""
+    from designing_data_warehouse_in_sql_server_spark.operators import ids
+    from tests.test_warm_queries import _spark_jobs
+
+    df = spark.createDataFrame(
+        [(i, (i * 37) % 101) for i in range(3000)], "rid int, v long"
+    )
+    order = [F.col("v"), F.col("rid")]
+    n_ntile = _spark_jobs(spark, lambda: ids.exact_ntile(df, 4, order, "x").collect())
+    n_ids = _spark_jobs(spark, lambda: ids.assign_sequential_ids(df, "x", order).collect())
+    assert n_ntile == n_ids, (n_ntile, n_ids)
+
+
+def test_two_phase_forms_reject_an_offset_relation_past_the_guard(spark, monkeypatch):
+    """Every two-phase form folds its offsets on the driver and must fail
+    fast, before the fold, once the offset relation passes
+    ``_MAX_OFFSET_ROWS``."""
+    import pytest
+
+    from designing_data_warehouse_in_sql_server_spark.operators import ids
+
+    monkeypatch.setattr(ids, "_MAX_OFFSET_ROWS", 0)
+    df = spark.createDataFrame(
+        [(i, i % 5, i) for i in range(50)], "rid int, g int, v long"
+    )
+    order = [F.col("v"), F.col("rid")]
+    for build in (
+        lambda: ids.assign_sequential_ids(df, "x", order),
+        lambda: ids.prefix_sum(df, "v", order, "x"),
+        lambda: ids.grouped_prefix_sum(df, "v", ["g"], order, "x"),
+        lambda: ids.prefix_max_exclusive(df, "v", order, "x"),
+        lambda: ids.exact_ntile(df, 4, order, "x"),
+        lambda: ids.exact_ntile_multi(df, 4, [("x", F.col("v"))], ["rid"]),
+    ):
+        with pytest.raises(ValueError, match="offset relation exceeds 0 rows"):
+            build()
+
+
 def test_scd2_rejects_duplicate_update_keys(spark):
     import pytest as _pytest
     from designing_data_warehouse_in_sql_server_spark.operators.scd2 import scd2_apply

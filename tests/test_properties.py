@@ -599,8 +599,13 @@ def test_two_phase_forms_invariant_to_partition_count(spark, parts):
     order = [F.col("v"), F.col("rid")]
     saved_thresh = ids.WINDOW_FORM_MAX_ROWS
     saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved_coalesce = spark.conf.get(coalesce)
     ids.WINDOW_FORM_MAX_ROWS = -1
     spark.conf.set("spark.sql.shuffle.partitions", parts)
+    # AQE would coalesce 300 rows' range partitions into one, and the
+    # cross-partition offset fold would go untested
+    spark.conf.set(coalesce, "false")
     # grouped form exercises the NULL-frame fold across partition
     # boundaries (r7 fix): every 7th value NULL, 3 groups
     gdf = spark.createDataFrame(
@@ -611,25 +616,43 @@ def test_two_phase_forms_invariant_to_partition_count(spark, parts):
         "rid int, g int, v long",
     )
     gorder = [F.col("rid")]
+    # every 5th value NULL, in rid order: some range partitions begin on
+    # a NULL, where the running sum is the offset alone and the running
+    # max skips the NULL
+    ndf = spark.createDataFrame(
+        [(i, None if i % 5 == 0 else (i * 37) % 101) for i in range(300)],
+        "rid int, v long",
+    )
+    desc = [F.col("v").desc(), F.col("rid")]
+    empty = spark.createDataFrame([], "rid int, g int, v long")
+
+    def run(hint):
+        def rows(out):
+            return sorted(tuple(r) for r in out.collect())
+
+        got = {}
+        for name, d in (("", df), ("empty_", empty)):
+            got[name + "seq"] = rows(ids.assign_sequential_ids(d, "x", order, n_hint=hint))
+            got[name + "psum"] = rows(ids.prefix_sum(d, "v", order, "x", total_col="t", n_hint=hint))
+            got[name + "pmax"] = rows(ids.prefix_max_exclusive(d, "v", order, "x", n_hint=hint))
+            got[name + "ntile"] = rows(ids.exact_ntile_multi(d, 4, [("x", F.col("v"))], ["rid"], n_hint=hint))
+            got[name + "ntile1"] = rows(ids.exact_ntile(d, 4, desc, "x", n_hint=hint))
+        for name, d in (("", gdf), ("empty_", empty)):
+            got[name + "gpsum"] = rows(ids.grouped_prefix_sum(d, "v", ["g"], gorder, "x", total_col="t", rows_per_group_hint=hint))
+        got["seq41"] = rows(ids.assign_sequential_ids(df, "x", order, start=41, n_hint=hint))
+        got["pmax_nulls"] = rows(ids.prefix_max_exclusive(ndf, "v", gorder, "x", n_hint=hint))
+        got["psum_nulls"] = rows(ids.prefix_sum(ndf, "v", gorder, "x", total_col="t", n_hint=hint))
+        return got
+
     try:
-        got = {
-            "seq": sorted(tuple(r) for r in ids.assign_sequential_ids(df, "x", order).collect()),
-            "psum": sorted(tuple(r) for r in ids.prefix_sum(df, "v", order, "x", total_col="t").collect()),
-            "pmax": sorted(tuple(r) for r in ids.prefix_max_exclusive(df, "v", order, "x").collect()),
-            "ntile": sorted(tuple(r) for r in ids.exact_ntile_multi(df, 4, [("x", F.col("v"))], ["rid"]).collect()),
-            "gpsum": sorted(tuple(r) for r in ids.grouped_prefix_sum(gdf, "v", ["g"], gorder, "x", total_col="t").collect()),
-        }
+        got = run(None)
     finally:
         ids.WINDOW_FORM_MAX_ROWS = saved_thresh
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+        spark.conf.set(coalesce, saved_coalesce)
     # reference: the window forms (partition-count-independent by construction)
-    want = {
-        "seq": sorted(tuple(r) for r in ids.assign_sequential_ids(df, "x", order, n_hint=300).collect()),
-        "psum": sorted(tuple(r) for r in ids.prefix_sum(df, "v", order, "x", total_col="t", n_hint=300).collect()),
-        "pmax": sorted(tuple(r) for r in ids.prefix_max_exclusive(df, "v", order, "x", n_hint=300).collect()),
-        "ntile": sorted(tuple(r) for r in ids.exact_ntile_multi(df, 4, [("x", F.col("v"))], ["rid"], n_hint=300).collect()),
-        "gpsum": sorted(tuple(r) for r in ids.grouped_prefix_sum(gdf, "v", ["g"], gorder, "x", total_col="t", rows_per_group_hint=300).collect()),
-    }
+    want = run(300)
+    assert not any(want[k] for k in want if k.startswith("empty_"))
     assert got == want
 
 
