@@ -8,7 +8,10 @@ scale-extension operators).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import os
+import re
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,132 +25,58 @@ import designing_data_warehouse_in_sql_server_spark.plans.extensions  # noqa: F4
 import designing_data_warehouse_in_sql_server_spark.plans.training  # noqa: F401
 import designing_data_warehouse_in_sql_server_spark.plans.quality  # noqa: F401
 
+_REPO = os.path.dirname(os.path.abspath(__file__))
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return flagship_revenue(spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness harness verifies the registry front-to-back (each
-# round covers the first 50 entries), so ordering decides which queries get
-# the official oracle check each round. Round 11 priorities (VERDICT r10
-# items 1-8): (a) the queries whose implementation or oracle CHANGED
-# this round — simhash_near_pairs (64-bit fingerprints + footer-count
-# Manku multitable dispatch, VERDICT r10 #3), the two new multimodal
-# recall certifications (mutation-tier catch-rate contracts for banded
-# dHash and frame voting, #6), video_near_dup_frames (pair algebra
-# extracted to the shared _video_frame_pairs helper the certification
-# reuses), llm_pipeline_end_to_end (the training-data composite:
-# funnel -> LSH+CC near dedup -> survivor-trained BPE -> packing ->
-# packed WRITER through a TableStore, #4), packed_shard_manifest
-# (deterministic sequence shards + doc-span column, #8),
-# packed_sequence_roundtrip (internals refactored into the shared
-# stream helpers), and corpus_curation_funnel (stages extracted to
-# _funnel_stages, reused by the composite); then (b) the COMPLETE
-# 25-query r5-stale set (the drafted r10 queue — clearing it makes
-# every row <= r6, the first time the standing invariant "every latest
-# green <= 2 rounds old" holds); then (c) 17 slots of r6-stale
-# rotation, alphabetical. The 31 remaining r6 rows head the round-12
-# queue below the boundary. Every query is also oracle-diffed locally
-# in tests/test_oracle_parity.py on every run.
-_CHECK_FIRST = (
-    # (a) new / changed this round
-    "simhash_near_pairs",
-    "image_phash_recall_certification",
-    "video_frame_recall_certification",
-    "video_near_dup_frames",
-    "llm_pipeline_end_to_end",
-    "packed_shard_manifest",
-    "packed_sequence_roundtrip",
-    "corpus_curation_funnel",
-    # (b) the complete r5-stale set
-    "distinct_count",
-    "distinct_dimension",
-    "doc_fingerprint",
-    "embedding_centroids",
-    "events_session_window",
-    "feature_minmax_scale",
-    "fk_integrity_audit",
-    "histogram_totalprice",
-    "inverted_index_postings",
-    "k_anonymity_audit",
-    "linear_interpolate",
-    "pivot_event_counts",
-    "quantile_disc",
-    "recursive_month_spine",
-    "reservoir_sample_per_group",
-    "revenue_gini",
-    "rolling_range_window",
-    "scd2_dimension",
-    "similarity_ivf_topk",
-    "similarity_lsh_topk",
-    "similarity_topk_cosine",
-    "string_functions",
-    "topk_per_group_with_ties",
-    "triangle_count",
-    "unpivot_event_counts",
-    # (c) r6-stale rotation, alphabetical
-    "abc_classification",
-    "argmax_per_group",
-    "asof_join_nearest",
-    "benford_first_digit",
-    "bitmap_exact_distinct",
-    "contingency_chi_square",
-    "cusum_mean_shift",
-    "decontaminate_bloom",
-    "dedup_incremental_lsh_store",
-    "equi_depth_histogram",
-    "funnel_conversion",
-    "impute_group_mean",
-    "lang_id_ngram",
-    "merge_insert_only",
-    "merge_upsert_full_outer",
-    "minhash_jaccard_estimate",
-    "mode_per_group",
-    # --- 50-query window boundary is here (8 changed/new + 25 r5 +
-    # 17 r6). Round-12 queue: the remaining r6-stale rows ---
-    "multimodal_features",
-    "pack_sequences",
-    "pareto_frontier",
-    "peak_concurrency",
-    "percent_rank_global",
-    "pii_scrub",
-    "prepare_corpus",
-    "q12_ship_delay",
-    "q13_order_distribution",
-    "q14_promo_effect",
-    "q17_small_quantity",
-    "q22_dormant_customers",
-    "q6_revenue_forecast",
-    "quality_repetition",
-    "range_join_event_pairs",
-    "salted_skew_join",
-    "scalar_expressions",
-    "share_of_parent",
-    "stratified_kfold",
-    "stratified_sample",
-    "surrogate_key_join",
-    "systematic_sample",
-    "text_quality_score",
-    "timeseries_gap_fill",
-    "token_count",
-    "train_val_test_split",
-    "unknown_member_join",
-    "watermark_max_date",
-    "window_relative_rank",
-    "yoy_growth",
-)
+def correctness_rounds() -> list[dict]:
+    """The committed ``CORRECTNESS_r<NN>.json`` records, oldest round first:
+    one ``{query: {"rows_match", "schema_match", "hash_match", ...}}`` each."""
+    found = [
+        (int(m.group(1)), f)
+        for f in os.listdir(_REPO)
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))
+    ]
+    rounds = []
+    for _, f in sorted(found):
+        with open(os.path.join(_REPO, f)) as fh:
+            rounds.append(json.load(fh))
+    return rounds
 
 
-def _prioritized(registry: dict) -> dict:
-    head = {k: registry[k] for k in _CHECK_FIRST if k in registry}
-    tail = {k: v for k, v in registry.items() if k not in head}
-    return {**head, **tail}
+def check_order(names: Iterable[str], rounds: list[dict]) -> list[str]:
+    """``names`` in the order the correctness harness should check them.
+    It checks the registry front to back, a window of entries per round,
+    so the queries whose evidence is weakest go first: those never green
+    or whose latest result failed, then the rest by the round they were
+    last green in, oldest first. Ties go by name."""
+    last_green: dict[str, int] = {}
+    failing: set[str] = set()
+    for rnd, results in enumerate(rounds):
+        for name, r in results.items():
+            if r["rows_match"] and r["schema_match"] and r["hash_match"]:
+                last_green[name] = rnd
+                failing.discard(name)
+            else:
+                failing.add(name)
+
+    def key(name: str) -> tuple[int, str]:
+        stale = name in failing or name not in last_green
+        return (-1 if stale else last_green[name], name)
+
+    return sorted(names, key=key)
+
+
+_ROUNDS = correctness_rounds()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _prioritized(dict(QUERIES))
+    return {k: QUERIES[k] for k in check_order(QUERIES, _ROUNDS)}
 
 
 def oracle_sql() -> dict[str, str]:
-    return _prioritized(dict(ORACLES))
+    return {k: ORACLES[k] for k in check_order(ORACLES, _ROUNDS)}

@@ -1,32 +1,50 @@
-"""Benchmark harness: runs the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+"""Measurement harness for the query registry, at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Each query is forced with a noop-format write (full computation, no
-driver-side collect) after a warm-up of the session on a trivial job.
+    python bench.py [QUERY ...]              time the queries (default: all)
+    python bench.py --scale N [QUERY ...]    time them at 1x and on an N-fold copy
+    python bench.py --plans DIR [QUERY ...]  write each plan to DIR/<query>.txt
 
-End-of-round bookkeeping: the driver's bounded stdout tail only captures
-the short summary line, so the per-query map survives a round ONLY if the
-final snapshot pass's bench_queries.json is committed as
-BENCH_DETAIL_r<NN>.json (VERDICT r11 #4) — do that before the end-of-round
-commit so the next round can diff per-query.
+Timing forces each query with a noop-format write (full computation, no
+driver-side collect), best of $SPARK_GRAFT_BENCH_TRIALS (default 2), after a
+warm-up of the session and of the same queries at the sibling sf0.001
+directory.
+
+A run prints the per-query map as one JSON line, then a short summary line
+LAST, for callers that keep only a bounded tail of stdout. A run over the whole
+registry also writes the map to bench_queries.json; its per-query record
+survives a round only if that file is committed as BENCH_DETAIL_r<NN>.json.
+A run over named queries writes no file.
+
+--scale N prints one {"op", "scale", "sec"} line per query and scale, then
+{"scale", "ratios"}. The N-fold copy of every table lives in a temporary
+directory, removed afterwards.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import gc
+import io
 import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from designing_data_warehouse_in_sql_server_spark.session import (  # noqa: E402
     checkpoint_scope,
     get_spark,
+)
+from designing_data_warehouse_in_sql_server_spark.sources.parquet import (  # noqa: E402
+    load_table,
 )
 
 HEADLINE = [
@@ -42,6 +60,20 @@ HEADLINE = [
     "sessionize_events",
 ]
 
+# Key columns each copy moves by _KEY_OFFSET, so every copy keeps its own
+# foreign keys and never joins another.
+_KEYED_TABLES = {
+    "customer": ["c_custkey"],
+    "supplier": ["s_suppkey"],
+    "part": ["p_partkey"],
+    "orders": ["o_orderkey", "o_custkey"],
+    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
+    "events": ["event_id", "user_id"],
+}
+_KEY_OFFSET = 100_000_000
+_TEXT_OFFSET = 10_000_000  # doc_id / vec_id step per copy
+_SHARED_TABLES = ("nation", "region")
+
 
 def warm_up(spark, qs: dict, warm_dir: str) -> None:
     """Run every query once at ``warm_dir``. A query that fails here is
@@ -56,70 +88,53 @@ def warm_up(spark, qs: dict, warm_dir: str) -> None:
             print(f"warm-up {name}: {type(exc).__name__}: {first_line}", file=sys.stderr)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("ddw-bench")
-    import __spark_entry__ as entrymod
+def _gen2_collections() -> int:
+    return gc.get_stats()[2]["collections"]
 
-    qs = entrymod.queries()
-    # Warm-up: run every query once at the smallest scale factor so the
-    # timed phase measures steady-state execution, not first-call JIT /
-    # codegen compilation / Python-worker startup (worth seconds on the
-    # first higher-order-function, join, and mapInPandas queries).
-    # Standard benchmark hygiene — warm-up excluded from all timings.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir):
-        warm_up(spark, qs, warm_dir)
-    spark.sparkContext._jvm.System.gc()
 
-    names = [n for n in HEADLINE if n in qs]
-    # any registered query not in HEADLINE still gets timed (full coverage)
-    names += [n for n in sorted(qs) if n not in names]
-    # optional subset (comma-separated) for partial refreshes — e.g.
-    # re-measuring only the queries new since the last sf1 pass; the
-    # driver never sets this, so driver benches stay full-registry
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    if only:
-        wanted = {w.strip() for w in only.split(",") if w.strip()}
-        names = [n for n in names if n in wanted]
+def time_query(spark, query, sf_dir: str, trials: int) -> tuple[float, float, float, int]:
+    """Best of ``trials`` runs of ``query`` at ``sf_dir``: (best s, worst s,
+    build s of the best trial, generation-2 Python collections over all
+    timed regions). Build time runs until the query function returns its
+    plan: py4j construction plus any eager checkpoint or collect in it.
+    Each trial's checkpoints are released after its timed region."""
+    runs, gen2 = [], 0
+    for _ in range(trials):
+        with checkpoint_scope(spark):
+            collections = _gen2_collections()
+            start = time.perf_counter()
+            df = query(spark, sf_dir)
+            built = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            end = time.perf_counter()
+            gen2 += _gen2_collections() - collections
+        runs.append((end - start, built - start))
+    best = min(runs)
+    return best[0], max(runs)[0], best[1], gen2
 
-    # Best-of-N per query: the shared host shows load spikes that inflate
-    # a single pass by up to 2x; the minimum is the steady-state number a
-    # dedicated node reproduces. N is small so the full bench stays fast.
-    n_trials = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "2")))
-    # Host-load telemetry (round-4 lesson: a pass taken on a loaded
-    # shared host showed uniform ~1.5x inflation that looked like code
-    # regressions; these fields make such a pass self-identifying so a
-    # reader can adjudicate noise mechanically).
+
+def bench(spark, qs: dict, names: list[str], sf_dir: str, trials: int, queries_file) -> None:
+    # Host-load telemetry: a pass taken on a loaded shared host shows a
+    # uniform ~1.5x inflation that reads like code regressions; these
+    # fields make such a pass self-identifying.
     load_before = os.getloadavg()
     spread_worst = 0.0  # max over queries of (worst trial / best trial)
     timings: dict[str, float] = {}
+    build_s: dict[str, float] = {}
+    gen2: dict[str, int] = {}
     for name in names:
-        best, worst = float("inf"), 0.0
-        for _ in range(n_trials):
-            # the query's checkpoints are released when the block exits,
-            # after the timed region
-            with checkpoint_scope(spark):
-                start = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                sec = time.perf_counter() - start
-            best, worst = min(best, sec), max(worst, sec)
+        best, worst, build, gen2[name] = time_query(spark, qs[name], sf_dir, trials)
         timings[name] = round(best, 3)
-        if n_trials > 1 and best > 0:
+        build_s[name] = round(build, 3)
+        if trials > 1 and best > 0:
             spread_worst = max(spread_worst, worst / best)
     load_after = os.getloadavg()
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
     total = round(sum(timings.values()), 3)
-    # Per-query map first (its own line + a sidecar file), then a SHORT
-    # standalone summary line LAST: the driver captures a bounded tail of
-    # stdout, and round 2's single long line (89 queries) overflowed it,
-    # cutting the head of the JSON ("parsed": null in BENCH_r02.json).
-    queries_file = os.path.join(REPO, "bench_queries.json")
     host_meta = {
-        "trials_per_query": n_trials,
+        "trials_per_query": trials,
         "loadavg_before": [round(x, 2) for x in load_before],
         "loadavg_after": [round(x, 2) for x in load_after],
         "cpus": os.cpu_count(),
@@ -133,9 +148,12 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "host": host_meta,
+        "build_s": build_s,
+        "gen2_collections": gen2,
     }
-    with open(queries_file, "w") as f:
-        json.dump(per_query, f)
+    if queries_file:
+        with open(os.path.join(REPO, queries_file), "w") as f:
+            json.dump(per_query, f)
     print(json.dumps(per_query), flush=True)
     print(
         json.dumps(
@@ -145,12 +163,158 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(timings),
-                "queries_file": "bench_queries.json",
+                "queries_file": queries_file,
                 "host": host_meta,
             }
         ),
         flush=True,
     )
+
+
+def build_copy(spark, src: str, dst: str, n: int) -> None:
+    """Write an ``n``-fold copy of the tables at ``src`` into ``dst``, whose
+    structure grows linearly with ``n``. Per copy, entity and fact keys move
+    by _KEY_OFFSET and events by 10 years, so copies never share a join key
+    or an (event_type, time bucket); documents get every word salted with
+    the copy number, so near-duplicates pair only within a copy; embeddings
+    get a cyclic rotation (norm-preserving, so copies lie far apart).
+    nation and region are linked, not copied."""
+    copies = spark.range(n).select(F.col("id").alias("__copy"))
+    # 2 files per core: the copy of a 1-3-file table would otherwise be 1-3
+    # large files whose row groups cap every scan of it at a few tasks
+    n_files = 2 * spark.sparkContext.defaultParallelism
+
+    def write(name, df):
+        df.repartition(n_files).write.mode("overwrite").parquet(
+            os.path.join(dst, f"{name}.parquet")
+        )
+
+    def copied(name):
+        return load_table(spark, src, name).crossJoin(F.broadcast(copies))
+
+    for name, keys in _KEYED_TABLES.items():
+        df = copied(name)
+        for k in keys:
+            df = df.withColumn(k, F.col(k) + F.col("__copy") * _KEY_OFFSET)
+        if name == "events":
+            df = df.withColumn("ts", F.timestamp_add("YEAR", F.col("__copy") * 10, F.col("ts")))
+        write(name, df.drop("__copy"))
+
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    salted = F.array_join(
+        F.transform(words, lambda w: F.concat(w, F.lit("x"), F.col("__copy").cast("string"))),
+        " ",
+    )
+    write(
+        "documents",
+        copied("documents").select(
+            (F.col("doc_id") + F.col("__copy") * _TEXT_OFFSET).alias("doc_id"),
+            salted.alias("text"),
+            "lang",
+            "source",
+            F.length(salted).cast("long").alias("n_chars"),
+        ),
+    )
+
+    emb = load_table(spark, src, "embeddings")
+    dim = len(emb.select("embedding").first()[0])
+    rot = F.col("__copy") % dim
+    write(
+        "embeddings",
+        copied("embeddings").select(
+            (F.col("vec_id") + F.col("__copy") * _TEXT_OFFSET).alias("vec_id"),
+            F.concat(
+                F.slice("embedding", rot + 1, F.lit(dim) - rot), F.slice("embedding", 1, rot)
+            ).alias("embedding"),
+            "label",
+        ),
+    )
+    for name in _SHARED_TABLES:
+        os.symlink(
+            os.path.join(os.path.abspath(src), f"{name}.parquet"),
+            os.path.join(dst, f"{name}.parquet"),
+        )
+
+
+def scale_probe(spark, qs: dict, names: list[str], sf_dir: str, n: int, trials: int) -> None:
+    def timed_at(d: str, scale: int) -> dict[str, float]:
+        out = {}
+        for name in names:
+            out[name] = round(time_query(spark, qs[name], d, trials)[0], 3)
+            print(json.dumps({"op": name, "scale": scale, "sec": out[name]}), flush=True)
+        return out
+
+    base = timed_at(sf_dir, 1)
+    with tempfile.TemporaryDirectory(prefix="bench_scale_") as tmp:
+        build_copy(spark, sf_dir, tmp, n)
+        scaled = timed_at(tmp, n)
+    ratios = {k: round(scaled[k] / base[k], 2) if base[k] else None for k in scaled}
+    print(json.dumps({"scale": n, "ratios": ratios}), flush=True)
+
+
+def write_plans(spark, qs: dict, names: list[str], sf_dir: str, out_dir: str) -> None:
+    """``explain("formatted")`` of each query to ``out_dir/<query>.txt``. A
+    query that checkpoints eagerly shows its final, post-checkpoint plan."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        with checkpoint_scope(spark):
+            df = qs[name](spark, sf_dir)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain(mode="formatted")
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(buf.getvalue())
+        print(f"wrote {path} ({len(buf.getvalue().splitlines())} lines)", flush=True)
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description="Time, scale-probe or explain registry queries.",
+    )
+    parser.add_argument("queries", nargs="*", metavar="QUERY", help="registered queries (default: all)")
+    mode = parser.add_mutually_exclusive_group()
+    mode.add_argument("--scale", type=int, metavar="N", help="also time on an N-fold copy of the data")
+    mode.add_argument("--plans", metavar="DIR", help="write each query's formatted plan to DIR")
+    args = parser.parse_args(argv)
+    if args.scale is not None and args.scale < 2:
+        parser.error("--scale needs N >= 2")
+
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    unknown = sorted(set(args.queries) - set(qs))
+    if unknown:
+        parser.error(f"unknown queries: {', '.join(unknown)}")
+    # HEADLINE first, then every other registered query (full coverage)
+    ordered = [n for n in HEADLINE if n in qs] + [n for n in sorted(qs) if n not in HEADLINE]
+    names = [n for n in ordered if not args.queries or n in args.queries]
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("ddw-bench")
+    if args.plans:
+        write_plans(spark, qs, names, sf_dir, args.plans)
+        spark.stop()
+        return
+
+    # Warm-up: run the queries once at the smallest scale factor so the
+    # timed phase measures steady-state execution, not first-call JIT,
+    # codegen compilation or Python-worker startup (worth seconds on the
+    # first higher-order-function, join and mapInPandas queries).
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if os.path.isdir(warm_dir):
+        warm_up(spark, {n: qs[n] for n in names}, warm_dir)
+    spark.sparkContext._jvm.System.gc()
+
+    # Best-of-N per query: the shared host shows load spikes that inflate
+    # a single pass by up to 2x; the minimum is the steady-state number a
+    # dedicated node reproduces. N is small so the full bench stays fast.
+    trials = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "2")))
+    if args.scale:
+        scale_probe(spark, qs, names, sf_dir, args.scale, trials)
+    else:
+        bench(spark, qs, names, sf_dir, trials, None if args.queries else "bench_queries.json")
     spark.stop()
 
 

@@ -26,16 +26,32 @@ def test_registry_nonempty():
 
 
 def test_check_first_names_resolve():
-    """_prioritized silently drops unknown names, so a typo in the
-    hand-maintained _CHECK_FIRST rotation would silently demote a query
-    out of the driver's 50-slot check window (r8 review). Every entry
-    must resolve to a registered query, exactly once."""
+    """The check order is the whole registry, each query once."""
+    from designing_data_warehouse_in_sql_server_spark.plans import QUERIES
+
+    qs, oracles = _registry()
+    assert sorted(qs) == sorted(QUERIES)
+    assert list(oracles) == [n for n in qs if n in oracles]
+
+
+def test_check_order_puts_a_failed_query_first():
     import __spark_entry__ as e
 
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    failed = {**green, "hash_match": False}
+    rounds = [
+        {"a": green, "b": green, "c": green},
+        {"b": green, "c": failed},
+        {"a": green},
+    ]
+    # c failed last, d was never checked, then b (round 2) before a (round 3)
+    assert e.check_order(["a", "b", "c", "d"], rounds) == ["c", "d", "b", "a"]
+    # the committed rounds: the registry leads with its oldest evidence
     qs, _ = _registry()
-    unknown = [n for n in e._CHECK_FIRST if n not in qs]
-    assert not unknown, f"_CHECK_FIRST names not in registry: {unknown}"
-    assert len(set(e._CHECK_FIRST)) == len(e._CHECK_FIRST), "duplicate names"
+    rounds = e.correctness_rounds()
+    assert list(qs) == e.check_order(list(reversed(qs)), rounds)
+    last = {n: i for i, r in enumerate(rounds) for n in r}
+    assert last[next(iter(qs))] == min(last.values())
 
 
 QS, ORACLES = _registry()

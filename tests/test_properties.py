@@ -9,6 +9,8 @@ properties are about structure, not volume.
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -30,6 +32,23 @@ PROP = settings(
 
 keys = st.integers(min_value=0, max_value=5)
 vals = st.integers(min_value=-1000, max_value=1000)
+
+# AQE coalesces a small input's range partitions into ONE, and the two-phase
+# forms' cross-partition offset fold then never runs
+UNCOALESCED = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+
+
+@contextlib.contextmanager
+def session_conf(spark, confs: dict):
+    """Apply ``confs`` to the session within the block, then restore."""
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 @PROP
@@ -310,10 +329,11 @@ def test_exact_ntile_matches_window_ntile(spark, vals, k):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "rid int, v int"
     )
-    got = {
-        r.rid: r.b
-        for r in exact_ntile(df, k, [F.col("v"), F.col("rid")], "b").collect()
-    }
+    with session_conf(spark, UNCOALESCED):
+        got = {
+            r.rid: r.b
+            for r in exact_ntile(df, k, [F.col("v"), F.col("rid")], "b").collect()
+        }
     from pyspark.sql import Window
 
     want = {
@@ -506,32 +526,23 @@ def test_window_form_bit_identical_to_two_phase(spark, vals):
         [(i, v) for i, v in enumerate(vals)], "rid int, v long"
     )
     order = [F.col("v"), F.col("rid")]
-    pairs = [
-        (
-            assign_sequential_ids(df, "x", order, n_hint=len(vals)),
-            assign_sequential_ids(df, "x", order),
-        ),
-        (
-            prefix_sum(df, "v", order, "x", total_col="t", n_hint=len(vals)),
-            prefix_sum(df, "v", order, "x", total_col="t"),
-        ),
-        (
-            prefix_max_exclusive(df, "v", order, "x", n_hint=len(vals)),
-            prefix_max_exclusive(df, "v", order, "x"),
-        ),
-        (
-            exact_ntile(df, 3, order, "x", n_hint=len(vals)),
-            exact_ntile(df, 3, order, "x"),
-        ),
-        (
-            exact_ntile_multi(df, 3, [("x", F.col("v"))], ["rid"], n_hint=len(vals)),
-            exact_ntile_multi(df, 3, [("x", F.col("v"))], ["rid"]),
-        ),
-    ]
-    for fast, safe in pairs:
-        a = sorted(tuple(r) for r in fast.collect())
-        b = sorted(tuple(r) for r in safe.collect())
-        assert a == b, (fast.columns, a[:5], b[:5])
+
+    def run(hint):
+        return [
+            sorted(tuple(r) for r in out.collect())
+            for out in (
+                assign_sequential_ids(df, "x", order, n_hint=hint),
+                prefix_sum(df, "v", order, "x", total_col="t", n_hint=hint),
+                prefix_max_exclusive(df, "v", order, "x", n_hint=hint),
+                exact_ntile(df, 3, order, "x", n_hint=hint),
+                exact_ntile_multi(df, 3, [("x", F.col("v"))], ["rid"], n_hint=hint),
+            )
+        ]
+
+    with session_conf(spark, UNCOALESCED):
+        two_phase = run(None)
+    for fast, safe in zip(run(len(vals)), two_phase):
+        assert fast == safe, (fast[:5], safe[:5])
 
 
 @PROP
@@ -598,14 +609,7 @@ def test_two_phase_forms_invariant_to_partition_count(spark, parts):
     )
     order = [F.col("v"), F.col("rid")]
     saved_thresh = ids.WINDOW_FORM_MAX_ROWS
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    saved_coalesce = spark.conf.get(coalesce)
     ids.WINDOW_FORM_MAX_ROWS = -1
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    # AQE would coalesce 300 rows' range partitions into one, and the
-    # cross-partition offset fold would go untested
-    spark.conf.set(coalesce, "false")
     # grouped form exercises the NULL-frame fold across partition
     # boundaries (r7 fix): every 7th value NULL, 3 groups
     gdf = spark.createDataFrame(
@@ -645,11 +649,10 @@ def test_two_phase_forms_invariant_to_partition_count(spark, parts):
         return got
 
     try:
-        got = run(None)
+        with session_conf(spark, {**UNCOALESCED, "spark.sql.shuffle.partitions": parts}):
+            got = run(None)
     finally:
         ids.WINDOW_FORM_MAX_ROWS = saved_thresh
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        spark.conf.set(coalesce, saved_coalesce)
     # reference: the window forms (partition-count-independent by construction)
     want = run(300)
     assert not any(want[k] for k in want if k.startswith("empty_"))

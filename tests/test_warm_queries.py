@@ -102,9 +102,14 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _run(spark, names) -> None:
+def _run(spark, names) -> dict[str, int]:
+    """Run each query once; returns the codegen classes each one compiled."""
+    compiled = {}
     for name in names:
+        before = _compiles(spark)
         QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        compiled[name] = _compiles(spark) - before
+    return compiled
 
 
 def test_warm_pass_over_the_warehouse_queries_compiles_nothing(spark):
@@ -113,12 +118,11 @@ def test_warm_pass_over_the_warehouse_queries_compiles_nothing(spark):
     was seen to emit a few new class variants on its second or third run,
     so the guard asks for a pass that compiles nothing within three."""
     _run(spark, WAREHOUSE_QUERIES)
-    compiled = []
+    compiled, last = [], {}
     while len(compiled) < 3 and 0 not in compiled:
-        before = _compiles(spark)
-        _run(spark, WAREHOUSE_QUERIES)
-        compiled.append(_compiles(spark) - before)
-    assert compiled[-1] == 0, compiled
+        last = _run(spark, WAREHOUSE_QUERIES)
+        compiled.append(sum(last.values()))
+    assert compiled[-1] == 0, (compiled, {q: n for q, n in last.items() if n})
 
 
 def test_q11_pins_nothing_and_matches_its_oracle(spark):
